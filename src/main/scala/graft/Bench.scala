@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints the complete compact JSON record as the FIRST
   * stdout line AND a short BOUNDED (≤ ~1.3 KB: capped suspect/err lists,
@@ -98,15 +97,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // sql_asof needs the injected ASOF JOIN parser (build-time only)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session()
 
     // ---- warmup / scaffold phase (timed separately, reported as `setup`)
     val s0 = System.nanoTime()

@@ -82,7 +82,7 @@ private[graft] object StoreDir {
     cache.computeIfAbsent(dir, _ => { atomicSwap(dir)(build); dir })
 
   /** Canonical fixed-store path for `prefix` over data dir `d`:
-    * `/tmp/<prefix>-<basename>-<8-hex path hash>`. The basename keeps the
+    * `<tmpdir>/<prefix>-<basename>-<8-hex path hash>`. The basename keeps the
     * dir human-readable; the hash of the CANONICAL full path (VERDICT r8
     * ADVICE: symlinks and `..` spellings of one dir resolve to one store)
     * is what makes two DIFFERENT data dirs that merely share a basename
@@ -110,7 +110,8 @@ private[graft] object StoreDir {
     // basename from the CANONICAL path too (ADVICE r9): a symlink whose
     // leaf name differs from its target's must still land on the one
     // store the oracle constants compute from the literal dir.
-    s"/tmp/$prefix-$tag${new java.io.File(canon).getName}-$h"
+    new java.io.File(sys.props("java.io.tmpdir"),
+      s"$prefix-$tag${new java.io.File(canon).getName}-$h").getPath
   }
 
   /** Build into a process-unique staging dir, then swap it over `dir` —

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of the named contract
   * queries (all batch keys if none given). Used to check the scale
   * checklist — broadcast where intended, PushedFilters/ReadSchema at scans,
@@ -9,16 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      // sql_asof's injected ASOF JOIN parser only exists on a session
-      // BUILT with the extensions conf (same note as Verify/Bench)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     val keys =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.filterNot(_.startsWith("stream_")).toSeq.sorted

@@ -1,9 +1,14 @@
 package graft
 
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, PosTokenize}
+import graft.plans.{AsOfJoinStrategy, AsOfSqlParser, CosineBandedJoin, HammingBandedJoin, MvRewrite}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Production registration path for this library's Catalyst extensions:
   *
@@ -11,39 +16,41 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * injects `graft_cosine` into every session built from that config — the
-  * cluster-wide equivalent of the per-session
-  * `CosineSimilarity.register(spark)` used inside the contract queries
-  * (which stays, so queries are self-contained under the driver harness).
-  * New native functions/rules/strategies register here as the library grows.
+  * injects everything the companion declares into every session built
+  * from that config, plus the `ASOF [LEFT] JOIN` SQL parser, which only a
+  * session built with the extension can carry. Sessions built without it
+  * get the same functions, rules and strategies from
+  * [[graft.api.Graft.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
-    // §2-J generator (UDTF) extension tier: a custom Catalyst Generator,
-    // planned as a native Generate node (udtf_custom key; posexplode twin).
-    ext.injectFunction((
-      FunctionIdentifier("graft_pos_tokenize"),
-      new ExpressionInfo(classOf[graft.functions.PosTokenize].getName, "graft_pos_tokenize"),
-      (children: Seq[Expression]) => graft.functions.PosTokenize(children.head)))
-    // §7.6 banded-join rewrites (BandedJoinRules.scala). Injected rules run
-    // inside the operator-optimization fixpoint, so they see the
-    // pushed-into-join predicate shape after the first iteration; both are
-    // idempotent via the __graft_band marker. Sessions not built with
-    // extensions get the same rules via GraftRules.install.
-    ext.injectOptimizerRule(_ => graft.plans.HammingBandedJoin)
-    ext.injectOptimizerRule(_ => graft.plans.CosineBandedJoin)
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
-    // §7.3c whole-operator tier: plans graft.plans.AsOfJoin nodes (built by
-    // Graft.asofJoin) as the native AsOfJoinExec physical operator.
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // SQL-text front end for the same operator: `... ASOF [LEFT] JOIN ...`
-    // parses to the native node (AsOfSqlParser); every other statement
-    // delegates untouched to Spark's parser.
-    ext.injectParser((session, delegate) =>
-      new graft.plans.AsOfSqlParser(session, delegate))
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    // Injected rules run inside the operator-optimization fixpoint, so they
+    // see the pushed-into-join predicate shape after the first iteration;
+    // all are idempotent via their own markers.
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    // Every statement that is not an ASOF JOIN delegates untouched to
+    // Spark's parser.
+    ext.injectParser((session, delegate) => new AsOfSqlParser(session, delegate))
   }
+}
+
+/** The engine's one declaration of its Catalyst extensions. */
+object GraftExtensions {
+  /** `graft_cosine` (codegen'd vector cosine) and `graft_pos_tokenize`
+    * (a Generator planned as a native Generate node). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    (FunctionIdentifier("graft_cosine"),
+      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
+      c => CosineSimilarity(c(0), c(1))),
+    (FunctionIdentifier("graft_pos_tokenize"),
+      new ExpressionInfo(classOf[PosTokenize].getName, "graft_pos_tokenize"),
+      c => PosTokenize(c.head)))
+
+  /** The banded-join rewrites and the materialized-view substitution. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(HammingBandedJoin, CosineBandedJoin, MvRewrite)
+
+  /** Plans `graft.plans.AsOfJoin` nodes as the native `AsOfJoinExec`. */
+  val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy)
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement probe (guide §1): runs the named contract keys
   * once (cold, after the standard Bench warmup scaffolding is assumed
@@ -14,22 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // A/B knob for AQE's byte-based coalescing floor (defaults to the
-      // Spark default so probe numbers match bench conditions). The r20
-      // global-floor experiment: 1k helped byte-light/compute-heavy
-      // confirm stages (llm_simhash −0.7 s) but COST many-tiny-stage
-      // loop keys (graph_betweenness +1 s in 32-task launch overhead) —
-      // rejected globally in favor of targeted widens.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val jobStart = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

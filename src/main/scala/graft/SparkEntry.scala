@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.api.Graft
 import graft.ops._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -34,9 +35,13 @@ object SparkEntry {
       (graft.streaming.StreamOps.queries, graft.streaming.StreamOps.oracle)
     )
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  /** One entry per implemented operator from SURVEY.md §2. Each key runs
+    * [[graft.api.Graft.register]] first, so the keys also work on a
+    * session not built with `spark.sql.extensions=graft.GraftExtensions`. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.map(_._1).reduce(_ ++ _).map { case (k, f) =>
+      k -> ((s: SparkSession, d: String) => { Graft.register(s); f(s, d) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,19 +14,7 @@ object Verify {
     // (r16 verdict #6). The driver always passes sf0.01 — the default —
     // so its oracle strings are byte-identical to before.
     System.setProperty("graft.oracle.sfdir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // production registration path — the ASOF JOIN SQL front end
-      // (sql_asof) needs the injected parser, which only a session BUILT
-      // with extensions can carry; rules/strategies are also installed
-      // per-key via GraftRules.install for sessions without it
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     new java.io.File(outDir).mkdirs()
     val selected =
       if (keyFilter.isEmpty) SparkEntry.queries

@@ -1,8 +1,7 @@
 package graft.api
 
-import graft.functions.CosineSimilarity
+import graft.GraftExtensions
 import graft.ops.{LlmOps, TextOps}
-import graft.plans.GraftRules
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,13 +21,23 @@ import org.apache.spark.sql.functions._
   * using cosine-based entry points.
   */
 object Graft {
-  /** Register the engine's session extensions imperatively: the codegen'd
-    * `graft_cosine` function and the banded-join rewrite rules. Idempotent.
-    * (Sessions built with `spark.sql.extensions=graft.GraftExtensions` get
-    * both without calling this.) */
+  /** The imperative twin of `spark.sql.extensions=graft.GraftExtensions`:
+    * registers what `GraftExtensions` declares and this session lacks.
+    * Rules go to `experimental.extraOptimizations` (the batch after the
+    * main optimizer, when predicates sit in join conditions, the shape the
+    * matchers target); strategies to `experimental.extraStrategies`. A
+    * session built with the extension gets nothing a second time. */
   def register(spark: SparkSession): Unit = {
-    CosineSimilarity.register(spark)
-    GraftRules.install(spark)
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
+    val injected = spark.sessionState.planner.extraPlanningStrategies
+    if (!GraftExtensions.strategies.forall(injected.contains)) {
+      val x = spark.experimental
+      x.extraOptimizations ++= GraftExtensions.rules.filterNot(x.extraOptimizations.contains)
+      x.extraStrategies ++= GraftExtensions.strategies.filterNot(x.extraStrategies.contains)
+    }
   }
 
   /** Cosine similarity of two array<float>/array<double> columns via the
@@ -456,10 +465,10 @@ object Similarity {
     * (q_id, q_emb, q_lbl), the top-`k` most cosine-similar candidates
     * (n_id, n_emb, n_lbl) of a DIFFERENT label — nearest wrong answers
     * for contrastive training. Candidates are broadcast; cap the query
-    * side at scale, like [[knn]]. Registers the codegen'd cosine. */
+    * side at scale, like [[knn]]. Calls [[Graft.register]] itself. */
   def hardNegatives(spark: SparkSession, queries: DataFrame,
                     candidates: DataFrame, k: Int = 3): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
+    Graft.register(spark)
     graft.ops.LlmOps.hardNegativesOf(queries, candidates, k)
   }
 

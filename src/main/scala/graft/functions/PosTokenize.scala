@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -70,15 +68,4 @@ case class PosTokenize(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): PosTokenize =
     copy(child = newChild)
-}
-
-object PosTokenize {
-  /** Idempotent session registration (same convention as
-    * [[CosineSimilarity.register]]); also injected cluster-wide by
-    * `graft.GraftExtensions`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pos_tokenize"),
-      new ExpressionInfo(classOf[PosTokenize].getName, "graft_pos_tokenize"),
-      (children: Seq[Expression]) => PosTokenize(children.head))
 }

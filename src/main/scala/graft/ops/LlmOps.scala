@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1669,7 +1668,6 @@ object LlmOps {
     // llm_knn_ivf (cell-probed) or random-hyperplane banding (= llm_simhash
     // on embedding sign bits); this key is their exact ground truth.
     "llm_neardup_embedding" -> ((s, d) => {
-      CosineSimilarity.register(s)
       // probe side wide (one cosine per candidate pair runs there); the
       // broadcast build side stays on the plain scan
       val a = Tables.embeddingsWide(s, d)
@@ -1693,7 +1691,6 @@ object LlmOps {
     // on semDedupOf). τ = 0.3 matches llm_neardup_embedding's predicate, so
     // the two keys' outputs are directly comparable recall evidence.
     "llm_semdedup" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddingsWide(s, d)
       semDedupOf(e.filter(col("embedding").isNotNull),
         s.read.parquet(s"${annIndexPath(s, d)}/cen"), 0.3)
@@ -1758,7 +1755,6 @@ object LlmOps {
     // Brute-force kNN baseline: first 100 query vectors × broadcast candidate
     // set, cosine via the codegen'd Expression, per-query top-5 window.
     "llm_knn_bruteforce" -> ((s, d) => {
-      CosineSimilarity.register(s)
       // query side wide: each query row scores the whole broadcast set
       val q = Tables.embeddingsWide(s, d)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1785,7 +1781,6 @@ object LlmOps {
     // is what an IVF/LSH index would serve; the audit itself runs on a
     // capped query sample exactly like the other ground-truth keys.
     "llm_matryoshka_ann" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val q = Tables.embeddingsWide(s, d)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
         .filter(col("q_id") % 50 === 0)
@@ -1855,7 +1850,6 @@ object LlmOps {
     // comparison itself is one co-partitioned equi-join on (q_id, n_id)
     // + one count per query — eval cost is index cost, not corpus cost.
     "llm_ann_recall_eval" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddings(s, d)
       val q = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
         .filter(col("q_id") < 100)
@@ -1875,7 +1869,6 @@ object LlmOps {
     // store ≡ fresh-training proof. PropertySpec holds the floor/
     // monotonicity bounds; this key hash-pins the exact per-query recall.
     "llm_ann_recall_ivf" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val idx = annIndexPath(s, d)
       val e = Tables.embeddingsWide(s, d)
       val q = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1899,7 +1892,6 @@ object LlmOps {
     // hash-gated per-query row; llm_matryoshka_ann's own output already
     // carries its measured recall, completing the per-index recall board.
     "llm_ann_recall_ivfpq" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val idx = annIndexPath(s, d)
       val e = Tables.embeddingsWide(s, d)
       val q = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1998,7 +1990,6 @@ object LlmOps {
     // else 0. The hit join is one co-partitioned equi-join on
     // (q_id, n_id) — eval cost is index cost, not corpus cost.
     "llm_mrr_eval" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddings(s, d)
       val q = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
         .filter(col("q_id") < 100)
@@ -2009,7 +2000,6 @@ object LlmOps {
     }),
 
     "llm_knn_lsh" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddings(s, d)
       val q = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
         .filter(col("q_id") < 100)
@@ -2023,7 +2013,6 @@ object LlmOps {
     // Centroid components rounded to 6dp BEFORE the cosine so Spark's and
     // the oracle's float-summation-order drift cannot flip an assignment.
     "llm_knn_centroids" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddingsWide(s, d) // probe side of the centroid crossJoin
       val centroids =
         centroidOf(e.select(col("label").as("clabel"), col("embedding")), "clabel")
@@ -2131,7 +2120,6 @@ object LlmOps {
     // knn family — the label test rides the join condition, so same-label
     // pairs never reach the (codegen'd) cosine.
     "llm_hard_negatives" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val q = Tables.embeddingsWide(s, d)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
                 col("label").as("q_lbl"))
@@ -2278,7 +2266,6 @@ object LlmOps {
     // store-read ≡ fresh-training (6dp-rounded doubles and raw float
     // embeddings round-trip parquet exactly).
     "llm_knn_ivf" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val idx = annIndexPath(s, d)
       val e = Tables.embeddingsWide(s, d) // probe assignment side
       val nprobe = s.conf.getOption(IvfNprobeKey).map(_.toInt).getOrElse(IvfProbes)
@@ -2300,7 +2287,6 @@ object LlmOps {
     // integers times a shared double scale, so both engines compute
     // bit-identical cosines and the order cannot drift.
     "llm_quantize_int8" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddingsWide(s, d) // probe side of the dequantized search
       val dq = quantizeInt8Of(e).select(col("vec_id"), col("v"))
       val q = dq.filter(col("vec_id") < 100)
@@ -2324,7 +2310,6 @@ object LlmOps {
     // shortlist × queries, not corpus size. Queries: vec_id < 100 (the
     // shared probe cap).
     "llm_quantize_pq" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddingsWide(s, d)
       // quantized corpus from the day-1 store (train-once economics;
       // store-read ≡ fresh-train is pinned by ApiSpec): the posting's
@@ -2361,7 +2346,6 @@ object LlmOps {
     // trainers are iterative); PropertySpec pins the exhaustive-knob ≡
     // brute-force identity and the default-knob recall.
     "llm_knn_ivfpq" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val idx = annIndexPath(s, d)
       val e = Tables.embeddingsWide(s, d)
       ivfPqSearchPosting(e.filter(col("vec_id") < 100), e,
@@ -2380,7 +2364,6 @@ object LlmOps {
     // store (both posting halves unioned) — the search half is
     // hash-gated; PropertySpec pins append ≡ full-rebuild bit-for-bit.
     "llm_ann_incremental" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val idx = annIncPath(s, d)
       val e = Tables.embeddingsWide(s, d)
       val posting = s.read.parquet(s"$idx/posting1")

@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.CosineSimilarity
-import graft.plans.{CosineBandedJoin, GraftRules}
+import graft.plans.CosineBandedJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -487,7 +486,6 @@ object OptOps {
     // reads graft_mv, not orders.parquet — plus the Filter negative
     // control: a filtered aggregate must keep reading the fact).
     "opt_mv_rewrite" -> ((s, d) => {
-      graft.plans.GraftRules.install(s)
       mvSummary(s, d)
       val saved = s.conf.getOption("spark.graft.rewrite.mv")
       s.conf.set("spark.graft.rewrite.mv", "true")
@@ -544,7 +542,6 @@ object OptOps {
     // equi key anywhere in the source. HammingBandedJoin turns it into the
     // 5-band bucketed equi-join.
     "opt_hamming_rewrite" -> ((s, d) => {
-      GraftRules.install(s)
       val sigs = LlmOps.simhashSigs(s, d, LlmOps.TextHash)
       val a = sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
       val b = sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))
@@ -563,8 +560,6 @@ object OptOps {
     // the conf is unset so no other query in the session — in particular
     // llm_neardup_embedding's exact all-pairs — can be rewritten.
     "opt_cosine_rewrite" -> ((s, d) => {
-      GraftRules.install(s)
-      CosineSimilarity.register(s)
       // Declared 1000-vector subset: at τ=0.3 sign-bit banding only prunes
       // ~half of all pairs (see BandedJoinRules — the loose-threshold
       // regime is where LSH fundamentally can't win), so the uncapped demo

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.Tables
-import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -114,7 +113,6 @@ object UdfOps {
     // the row-for-row equality with the posexplode twin; the oracle is the
     // same DuckDB SQL as udtf_generator's).
     "udtf_custom" -> ((s, d) => {
-      graft.functions.PosTokenize.register(s)
       Tables.documents(s, d)
         .filter(col("doc_id") < 100)
         .select(col("doc_id"),
@@ -125,7 +123,6 @@ object UdfOps {
     // Custom Expression vs built-in higher-order-function twin, both in the
     // hash-checked output: cosine of consecutive embedding pairs.
     "expr_custom_cosine" -> ((s, d) => {
-      CosineSimilarity.register(s)
       val e = Tables.embeddings(s, d)
       val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
         .filter(col("a_id") < 200)
@@ -192,7 +189,9 @@ object UdfOps {
 
     // Manual double-precision cosine on BOTH columns: DuckDB's native
     // list_cosine_similarity computes in float32, whose rounded value can
-    // disagree with the double computation in the 4th decimal.
+    // disagree with the double computation in the 4th decimal. + 0.0
+    // normalizes IEEE signed zero: a cosine that rounds to zero from below
+    // is -0.0 in DuckDB but 0.0 from Spark's BigDecimal round.
     "expr_custom_cosine" -> s"""
       ${graft.Contract.embIngestCteSql},
       pairs AS (
@@ -207,7 +206,7 @@ object UdfOps {
                * list_sum(list_transform(be, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
           AS cosv
         FROM pairs)
-      SELECT a_id, round(cosv, 4) AS cos_expr, round(cosv, 4) AS cos_builtin
+      SELECT a_id, round(cosv, 4) + 0.0 AS cos_expr, round(cosv, 4) + 0.0 AS cos_builtin
       FROM c
       ORDER BY a_id"""
   ))

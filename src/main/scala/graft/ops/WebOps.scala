@@ -815,7 +815,6 @@ object WebOps {
     // row_number over the ALREADY-CUT 50-row frames (a single tiny
     // partition by construction — never a window over the corpus).
     "llm_hybrid_rrf" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       import org.apache.spark.sql.expressions.Window
       val lexTop = bm25Of(Tables.documents(s, d), "doc_id", "text",
                           Bm25Terms, Bm25K1, Bm25B)

@@ -95,7 +95,7 @@ object AsOfJoin {
     require(leftOn.length == rightOn.length,
       s"asofJoin: leftOn (${leftOn.length}) and rightOn (${rightOn.length}) differ in length")
     val spark = left.sparkSession
-    GraftRules.install(spark)
+    graft.api.Graft.register(spark)
     val resolver = spark.sessionState.analyzer.resolver
     def attr(out: Seq[Attribute], name: String, side: String): Attribute =
       out.filter(a => resolver(a.name, name)) match {
@@ -119,7 +119,7 @@ object AsOfJoin {
 }
 
 /** Plans [[AsOfJoin]] as [[AsOfJoinExec]]; injected by GraftExtensions /
-  * GraftRules.install. Everything else falls through to Spark's own
+  * registered by `Graft.register`. Everything else falls through to Spark's own
   * strategies (`Nil`). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

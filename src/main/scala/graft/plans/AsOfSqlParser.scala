@@ -278,7 +278,6 @@ private[graft] object AsOfSqlRewrite {
     // rows matched each other and diverged from the DuckDB oracle).
     val rFiltered = Filter(rightKeys.map(IsNotNull).reduce[Expression](And(_, _)), rPlan)
     val node = AsOfJoin(lPlan, rFiltered, leftKeys, rightKeys, lTs, rTs, outer, forward)
-    GraftRules.install(session) // strategy for sessions without extensions
 
     // Delegate-parse the statement with the join clause replaced by a
     // placeholder relation, then stitch the resolved node in its place.

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.CosineSimilarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -254,25 +253,4 @@ object CosineBandedJoin extends Rule[LogicalPlan] with PredicateHelper {
           case None => j
         }
     }
-}
-
-/** Registration for sessions not built with GraftExtensions (the driver
-  * harness): appends the rules to `spark.experimental.extraOptimizations`
-  * (the "User Provided Optimizers" fixpoint batch, which runs after the
-  * main optimizer — predicates are already pushed into join conditions by
-  * then, which is the shape the matchers target) and the planner
-  * strategies to `spark.experimental.extraStrategies` (consulted before
-  * Spark's built-ins, so [[AsOfJoin]] nodes plan as [[AsOfJoinExec]]).
-  * Idempotent. */
-object GraftRules {
-  val all: Seq[Rule[LogicalPlan]] = Seq(HammingBandedJoin, CosineBandedJoin, MvRewrite)
-  val strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Seq(AsOfJoinStrategy)
-  def install(s: SparkSession): Unit = {
-    val cur = s.experimental.extraOptimizations
-    val missing = all.filterNot(cur.contains)
-    if (missing.nonEmpty) s.experimental.extraOptimizations = cur ++ missing
-    val curS = s.experimental.extraStrategies
-    val missingS = strategies.filterNot(curS.contains)
-    if (missingS.nonEmpty) s.experimental.extraStrategies = curS ++ missingS
-  }
 }

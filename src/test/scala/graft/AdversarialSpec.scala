@@ -21,8 +21,6 @@ class AdversarialSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  graft.api.Graft.register(spark)
-
   private def one(df: DataFrame) = df.collect().head
 
   // ---------------------------------------------------------------- Stats

@@ -1039,7 +1039,6 @@ class ApiSpec extends AnyFunSuite {
         "band_idx", "band_val").withColumnRenamed("n", "n_vecs")) ===
       rowSet(SparkEntry.queries("llm_ann_lsh_stats")(spark, d)))
     // mrr over the same real truth/approx frames the key composes
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, d)
     val q = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       .filter(col("q_id") < 100)

@@ -17,10 +17,10 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("AsOfJoinStrategy rides the injected planner-strategy path") {
-    // GraftRules.install (the imperative fallback) also registers the
-    // strategy via experimental.extraStrategies, so a planned AsOfJoin
-    // alone cannot prove injection worked — assert the extensions-built
-    // session carries it in extraPlanningStrategies directly.
+    // Graft.register (the imperative path) registers the strategy via
+    // experimental.extraStrategies instead, so a planned AsOfJoin alone
+    // cannot prove injection worked — assert the extensions-built session
+    // carries it in extraPlanningStrategies directly.
     assert(spark.sessionState.planner.extraPlanningStrategies
       .contains(graft.plans.AsOfJoinStrategy),
       "planner strategy missing from the SparkSessionExtensions path")

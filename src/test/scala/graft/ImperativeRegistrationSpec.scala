@@ -1,0 +1,49 @@
+package graft
+
+import graft.plans.{AsOfJoinExec, AsOfJoinStrategy}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The imperative registration path: on a session built WITHOUT
+  * `spark.sql.extensions`, the keys that need the engine's functions,
+  * rules and strategies work only because `SparkEntry.queries` runs
+  * `Graft.register` on every dispatch. Has a forked JVM of its own
+  * (build.sbt testGrouping); every other suite shares TestSpark's
+  * extension-built session. */
+class ImperativeRegistrationSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  private lazy val spark = LocalSpark.session(cpus = 4, extensions = false)
+
+  /** Runs `key` twice; both runs must return the same non-empty rows. */
+  private def runTwice(key: String) = {
+    val first = SparkEntry.queries(key)(spark, TestSpark.sfDir).collect()
+    val df = SparkEntry.queries(key)(spark, TestSpark.sfDir)
+    assert(first.nonEmpty && df.collect().toSeq === first.toSeq, key)
+    df
+  }
+
+  test("expr_custom_cosine: graft_cosine resolves and equals its built-in twin") {
+    assert(!spark.sessionState.planner.extraPlanningStrategies.contains(AsOfJoinStrategy))
+    assert(runTwice("expr_custom_cosine").collect().forall(r => r.getDouble(1) == r.getDouble(2)))
+  }
+
+  test("udtf_custom: graft_pos_tokenize plans as a Generate node") {
+    val p = runTwice("udtf_custom").queryExecution.executedPlan.toString
+    assert(p.contains("Generate") && p.contains("graft_pos_tokenize"), p)
+  }
+
+  test("opt_hamming_rewrite: the rule bands the join") {
+    val df = runTwice("opt_hamming_rewrite")
+    assert(df.queryExecution.optimizedPlan.toString.contains("__graft_band"))
+    assert(!df.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+  }
+
+  test("join_asof_native: the strategy plans AsOfJoinExec") {
+    val plan = runTwice("join_asof_native").queryExecution.executedPlan
+    assert(collect(plan) { case j: AsOfJoinExec => j }.size === 1, plan)
+  }
+
+  test("repeated dispatch registers each rule and strategy exactly once") {
+    assert(spark.experimental.extraOptimizations === GraftExtensions.rules)
+    assert(spark.experimental.extraStrategies === GraftExtensions.strategies)
+  }
+}

@@ -32,6 +32,12 @@ abstract class KeyContractSpec(half: Int) extends AnyFunSuite {
       assert(a.toSeq === b.toSeq, s"$key is nondeterministic across runs")
     }
   }
+
+  // runs after every key above
+  test("the extension-built session gets no imperative copy of a rule or strategy") {
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(spark.experimental.extraStrategies.isEmpty)
+  }
 }
 
 class KeyContractSpecA extends KeyContractSpec(0)

@@ -1804,7 +1804,6 @@ class OperatorSpec extends AnyFunSuite {
     }
     // control: "truncating" to the full 64 dims must reproduce the full
     // ranking exactly — pins the two-ranking machinery itself
-    graft.functions.CosineSimilarity.register(spark)
     val q = Tables.embeddingsWide(spark, d)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       .filter(col("q_id") % 50 === 0)

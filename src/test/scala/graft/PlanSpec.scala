@@ -740,7 +740,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("opt_mv_rewrite: the aggregate is served from the MV; a Filter disqualifies") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftRules.install(spark)
     // (stagedPath, mvPath): since r19 the MV pipeline stages a finite-
     // guarded orders copy and defines the MV over THAT scan (a Filter in
     // the matched query would disqualify the rewrite, so the guard lives

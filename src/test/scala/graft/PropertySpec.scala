@@ -130,7 +130,6 @@ class PropertySpec extends AnyFunSuite {
     // 0.5 is the regression floor, not the target.
     val spark = TestSpark.spark
     val d = TestSpark.sfDir
-    graft.functions.CosineSimilarity.register(spark)
     val bf = SparkEntry.queries("llm_knn_bruteforce")(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val e = Tables.embeddings(spark, d)
@@ -185,7 +184,6 @@ class PropertySpec extends AnyFunSuite {
     // measured recall@5 0.476-0.48 (≈ IVF cell recall x ADC survival).
     val spark = TestSpark.spark
     val d = TestSpark.sfDir
-    graft.functions.CosineSimilarity.register(spark)
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddingsWide(spark, d)
     val bfRows = SparkEntry.queries("llm_knn_bruteforce")(spark, d).collect()
@@ -213,7 +211,6 @@ class PropertySpec extends AnyFunSuite {
     // pin keeps a future edit from accidentally coupling rows (e.g. a
     // normalization over the batch).
     val spark = TestSpark.spark
-    graft.functions.CosineSimilarity.register(spark)
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val idx = graft.ops.LlmOps.annIncPath(spark, d)
       val stored = spark.read.parquet(s"$idx/posting1")

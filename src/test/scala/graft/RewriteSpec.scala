@@ -36,7 +36,6 @@ class RewriteSpec extends AnyFunSuite {
   }
 
   test("cosine rewrite is gated: conf off leaves the exact nested-loop plan") {
-    CosineSimilarityRegistered()
     val naive = naiveCosineJoin()
     assert(spark.conf.getOption(CosineBandedJoin.ConfKey).isEmpty)
     val opt = naive.queryExecution.optimizedPlan.toString
@@ -77,7 +76,6 @@ class RewriteSpec extends AnyFunSuite {
     // regression. Executes the join (AQE finalizes the plan) and asserts
     // the band hash join and the graft_cosine confirm both sit inside a
     // WholeStageCodegen stage (the `*(n)` node prefix).
-    CosineSimilarityRegistered()
     val e = Tables.embeddingsWide(spark, d)
     val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
@@ -109,7 +107,6 @@ class RewriteSpec extends AnyFunSuite {
     // signature must compare against an element-typed zero (a float
     // literal against double elements fails type-check POST-analysis and
     // crashes the query the instant the opt-in conf is set)
-    CosineSimilarityRegistered()
     val e = Tables.embeddings(spark, d)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
     val a = e.select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
@@ -132,9 +129,6 @@ class RewriteSpec extends AnyFunSuite {
       assert(viaDouble.nonEmpty, "no banded pairs — vacuous test")
     } finally spark.conf.unset(CosineBandedJoin.ConfKey)
   }
-
-  private def CosineSimilarityRegistered(): Unit =
-    graft.functions.CosineSimilarity.register(spark)
 
   private def naiveCosineJoin() = {
     val e = Tables.embeddings(spark, d)

@@ -61,4 +61,12 @@ class StoreDirSpec extends AnyFunSuite {
     assert(builds.get() === 1) // second spelling hit the shared cache entry
     assert(Files.exists(Paths.get(s"$p1/marker")))
   }
+
+  test("the store root is java.io.tmpdir, not a hard-coded /tmp") {
+    val root = Files.createTempDirectory("graft-storedir-root")
+    val saved = System.getProperty("java.io.tmpdir")
+    System.setProperty("java.io.tmpdir", root.toString)
+    try assert(Paths.get(StoreDir.fixedPath("t", TestSpark.sfDir)).getParent === root)
+    finally System.setProperty("java.io.tmpdir", saved)
+  }
 }

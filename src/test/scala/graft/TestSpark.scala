@@ -2,24 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run (suites run in one JVM
-  * under sbt; repeated session churn dominates test time otherwise). */
+/** One shared local session per test JVM (repeated session churn dominates
+  * test time otherwise). Built with `graft.GraftExtensions`, the
+  * production registration path: ExtensionsSpec asserts graft_cosine
+  * resolves without any register() call. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      // exercise the production registration path (GraftExtensions) —
-      // ExtensionsSpec asserts graft_cosine resolves without any
-      // per-session register() call
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSpark.session(cpus = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Fuzz-injection differential sweep (r19, r18 verdict #2): nullsweep's
-superset. Builds a copy of an sf dir carrying BOTH the nullsweep PLAN's
-NULL injections AND deterministic adversarial values, then the normal
-Verify + selfcheck pair must be green against it:
+"""Fuzz-injection differential sweep (r19, r18 verdict #2). Builds a copy
+of an sf dir carrying BOTH deterministic NULL injections (NULL_PLAN:
+nullable business columns, every NULL_STRIDE-th row) AND deterministic
+adversarial values, then the normal Verify + selfcheck pair must be green
+against it:
 
     python3 tools/fuzzsweep.py [--seed N] [srcSf [dstDir]]  # default sf0.001
     SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify <dst> /tmp/fuzz_out"
@@ -10,6 +11,10 @@ Verify + selfcheck pair must be green against it:
 
 Injected (disjoint strides; deterministic — seed 0 is the pinned plan,
 any other --seed re-derives offsets/payloads reproducibly):
+  - NULLs into the NULL_PLAN columns (the r18 null sweep, folded in
+    here; it found 66 latent divergences: crashes on null text/payloads,
+    =!= filters eating null keys, ORDER BY null-position mismatches, CASE
+    fall-throughs, moment-merge avgdl deflation, signed zero).
   - NaN / +Inf / -Inf into the measure columns events.value,
     lineitem.l_discount, orders.o_totalprice (strides 101/97 with fixed
     offsets). The seams these target: NaN ordering (both engines sort
@@ -33,14 +38,32 @@ any other --seed re-derives offsets/payloads reproducibly):
     by event time and a duplicated tail would change batch boundaries,
     which is the replay harness's domain, not a data seam.
 
-Same contract as the null sweep: every oracle-gated key must hash-match
-DuckDB on this copy. NOT part of the Scala engine — dev tooling only.
+Every oracle-gated key must hash-match DuckDB on this copy. NOT part of
+the Scala engine — dev tooling only.
 """
 import pyarrow.parquet as pq
 import pyarrow as pa
 import os, random, shutil, sys
 
-from nullsweep import PLAN as NULL_PLAN, STRIDE as NULL_STRIDE
+NULL_STRIDE = 41
+
+# Wave 2 (r18) added user_id (keyed state / sessions), embedding (vector
+# stores), and p_name (string fns / fuzzy join). events.ts stays non-null
+# BY DESIGN: the streaming replay fixture is time-keyed by construction
+# (range-cut chunks), exactly as a production ingest boundary enforces a
+# non-null event time.
+NULL_PLAN = {
+    "events": ["value", "event_type", "user_id"],
+    "customer": ["c_acctbal", "c_mktsegment"],
+    "orders": ["o_orderpriority", "o_totalprice"],
+    "lineitem": ["l_discount"],
+    "documents": ["text", "lang"],
+    "embeddings": ["embedding"],
+    # Wave 3 (r19, ADVICE r18 #2): p_brand/p_type — fn_string's concat_ws
+    # and the SqlOps/WinOps part-dimension consumers were only proven on
+    # non-null brand/type before this.
+    "part": ["p_name", "p_brand", "p_type"],
+}
 
 # --seed N (r19 verdict #3): seed 0 (default) is the PINNED plan below,
 # byte-for-byte what the committed fuzzsweep_sf*.json snapshots certify -
@@ -78,7 +101,7 @@ EMB_EMPTY_STRIDE, EMB_EMPTY_OFF = 61, 3      # -> []
 EMB_ZERO_STRIDE, EMB_ZERO_OFF = 61, 30       # -> all-zero vector
 DUP_TABLES = {"orders": 71}                   # full-row duplicate PKs
 CONTENT_DUP = {"documents": ("doc_id", 71), "embeddings": ("vec_id", 71)}
-# per-(table, column) phase of the imported null-plan mask; seed 0 keeps
+# per-(table, column) phase of the null-plan mask; seed 0 keeps
 # the pinned phase 0 for every column
 NULL_OFFSETS = {(t, c): 0 for t in NULL_PLAN for c in NULL_PLAN[t]}
 
@@ -121,7 +144,7 @@ def main():
         t = pq.read_table(os.path.join(SRC, f))
         n = t.num_rows
         notes = []
-        # 1. nullsweep's NULL plan (superset contract)
+        # 1. the NULL plan
         if name in NULL_PLAN:
             for cname in NULL_PLAN[name]:
                 phase = NULL_OFFSETS[(name, cname)]

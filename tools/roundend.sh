@@ -11,13 +11,13 @@
 # never leave a previous run's parquet in place for selfcheck to
 # certify as green.
 #
-# Usage: tools/roundend.sh [prior BENCH_FULL record]   (default: r19's)
+# Usage: tools/roundend.sh [prior BENCH_FULL record]   (default: r21's)
 # FUZZ_SEED env overrides the fresh fuzz seed (default: today's date, so
 # every round-end sweeps a new input-space sample on top of the pinned
 # seed-0 plan — r19 verdict #3).
 set -eo pipefail
 cd "$(dirname "$0")/.."
-PRIOR="${1:-BENCH_FULL_r19_builder.json}"
+PRIOR="${1:-BENCH_FULL_r21_builder.json}"
 FUZZ_SEED="${FUZZ_SEED:-$(date +%Y%m%d)}"
 
 run_sweep() {  # run_sweep <dataDir> <outDir> <snapshotJson> <label>
