@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, PosTokenize}
+import graft.functions.{CosineSimilarity, MinHashSignature, PosTokenize, SimHashVote}
 import graft.plans.{AsOfJoinStrategy, AsOfSqlParser, CosineBandedJoin, HammingBandedJoin, MvRewrite}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -38,15 +38,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** The engine's one declaration of its Catalyst extensions. */
 object GraftExtensions {
-  /** `graft_cosine` (codegen'd vector cosine) and `graft_pos_tokenize`
-    * (a Generator planned as a native Generate node). */
+  /** `graft_cosine` (codegen'd vector cosine), `graft_pos_tokenize`
+    * (a Generator planned as a native Generate node), and the dedup
+    * signature kernels `graft_minhash` (shingle array → 64 MinHash minima)
+    * and `graft_simhash` (token-hash array → 60-bit SimHash). */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     (FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
       c => CosineSimilarity(c(0), c(1))),
     (FunctionIdentifier("graft_pos_tokenize"),
       new ExpressionInfo(classOf[PosTokenize].getName, "graft_pos_tokenize"),
-      c => PosTokenize(c.head)))
+      c => PosTokenize(c.head)),
+    (FunctionIdentifier("graft_minhash"),
+      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
+      c => MinHashSignature(c.head)),
+    (FunctionIdentifier("graft_simhash"),
+      new ExpressionInfo(classOf[SimHashVote].getName, "graft_simhash"),
+      c => SimHashVote(c.head)))
 
   /** The banded-join rewrites and the materialized-view substitution. */
   val rules: Seq[Rule[LogicalPlan]] = Seq(HammingBandedJoin, CosineBandedJoin, MvRewrite)

@@ -83,8 +83,12 @@ object Graft {
   * confirming exact score; feed them to [[Dedup.clusters]] for a complete
   * per-corpus keep/drop decision.
   *
-  * Caching note: the signature/shingle pipelines `.cache()` intermediate
-  * frames (they are consumed by 2–3 plan branches each). Spark evicts
+  * Caching note: each pair call `.cache()`s the one per-call frame its
+  * plan reads three times (signature build or banding, and both confirm
+  * sides): the shingle sets for minhash and containment, the signatures
+  * for simhash, the new batch's shingles and bands for incremental
+  * pairs. The signatures themselves are one native kernel pass per row
+  * (`graft_minhash`, `graft_simhash`), registered by the call. Spark evicts
   * under memory pressure, but a long-lived session issuing MANY dedup
   * calls should call [[Graft.clearCaches]] between batches — the cached
   * plans are per-call, are not reused across invocations, and are all

@@ -39,19 +39,23 @@ object LlmOps {
   private[graft] val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
   private[ops] val stopwordsSqlList = stopwords.map(w => s"'$w'").mkString("(", ", ", ")")
 
-  /** Word 3-gram shingle set of `text` (array_distinct), empty if <3 words. */
-  private def shingles(text: Column): Column = {
-    val ws = split(text, " ")
+  /** The word array every shingle is cut from. Project it as a column of
+    * its own and pass that column to [[shingles]]: handed the `split`
+    * expression instead, each `element_at` in the lambda would split the
+    * whole text again, O(words²) per document. */
+  private[graft] def words(text: Column): Column = split(text, " ")
+
+  /** Word 3-gram shingle set (array_distinct) of a projected [[words]]
+    * column, empty if <3 words. */
+  private[graft] def shingles(ws: Column): Column =
     when(size(ws) >= 3,
       array_distinct(transform(
         sequence(lit(0), size(ws) - 3),
         i => concat_ws(" ", element_at(ws, i + 1), element_at(ws, i + 2), element_at(ws, i + 3)))))
       .otherwise(array().cast("array<string>"))
-  }
 
-  /** MinHash parameters: k=64 permutations as universal hashes
-    * h_i(x) = (a_i*x + b_i) mod p over a 31-bit prime, banded 16×4.
-    * Seeded RNG → identical signatures on every run/executor.
+  /** MinHash banding: the k=64 seeded universal hashes of
+    * [[graft.functions.TextSignatures]], banded 16×4.
     *
     * Recall at b=16, r=4: P(detect) = 1-(1-J^4)^16 → 0.89 at J=τ=0.6,
     * 0.9978 at J=0.8, 1-4e-8 at J=0.9. The corpus's planted near-dups all
@@ -59,15 +63,9 @@ object LlmOps {
     * and sf0.1), so halving k from 128 cuts the dominant hashing cost with
     * no recall risk for the oracle; tune k/b up for corpora with mass near
     * the threshold. */
-  private val MinhashK = 64
+  private val MinhashK = graft.functions.TextSignatures.MinhashK
   private val Bands = 16
   private val RowsPerBand = MinhashK / Bands
-  private val P = 2147483647L // 2^31 - 1
-  private val (hashA, hashB) = {
-    val rnd = new scala.util.Random(42L)
-    (Array.fill(MinhashK)(1L + rnd.nextInt((P - 1).toInt)),
-     Array.fill(MinhashK)(rnd.nextInt(P.toInt).toLong))
-  }
 
   /** Ordered (doc_a < doc_b) pair expansion of a SORTED posting list column
     * `ids` — the in-bucket candidate generator shared by the minhash bands,
@@ -982,11 +980,22 @@ object LlmOps {
       ()
     }
 
+  /** `text` has ≥3 [[words]], tested without splitting it: `split(text,
+    * " ")` yields one word more than the text has spaces, so ≥3 words is
+    * a second space after the first. */
+  private def threeWords(text: Column): Column =
+    call_function("locate", lit(" "), text, locate(" ", text) + 1) > 0
+
   /** (doc_id, sh): shingle sets of every document with ≥1 shingle, over any
-    * (doc_id, text) frame — the graft.api entry point. */
+    * (doc_id, text) frame — the graft.api entry point. A document has a
+    * shingle exactly when it has ≥3 words, so the filter runs before the
+    * shingle projection and splits nothing: a filter on `size(sh)` (or on
+    * the word array) is pushed below the projection and evaluates it a
+    * second time. */
   private[graft] def shingledOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), shingles(col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
+    docs.filter(threeWords(col("text")))
+      .select(col("doc_id"), words(col("text")).as("ws"))
+      .select(col("doc_id"), shingles(col("ws")).as("sh"))
 
   /** Contract-key variant — reads the per-(JVM, sfDir) persisted shingle
     * store (r16 verdict #7): the normalized shingle sets are a derived
@@ -1023,28 +1032,24 @@ object LlmOps {
 
   /** (doc_id, band, bh): LSH band fingerprints of the MinHash signature.
     *
-    * shingle → 31-bit base hash → k minima per doc, computed as ONE
-    * codegen'd HashAggregate: explode shingles, hash once, take the k=64
-    * affine-permutation minima as 64 min-aggregate columns. Partial
-    * aggregation combines map-side, so the shuffle carries exactly one
-    * signature row (k longs ≈ 512 B) per document — the same bytes the
-    * banding emits anyway; at 100 TB the build is bounded by OUTPUT size,
-    * not by the exploded input. (A shuffle-free formulation via per-row
-    * higher-order array exprs produces identical signatures but runs
-    * interpreted — measured 2.3× slower at sf0.1 — because lambda
-    * functions never enter whole-stage codegen; the aggregate form keeps
-    * the 64 multiply-mod-min chains inside generated code.) Then 16 bands
-    * of 4 rows: band fingerprint = hash of the band's 4 signature slots.
+    * shingle array → k=64 minima per row in ONE pass of the native
+    * `graft_minhash` kernel (each shingle hashed once, 64 multiply-mod-min
+    * steps in a primitive loop), then a `groupBy(doc_id)` of per-slot
+    * `min` so a repeated doc_id still gets one merged signature — that
+    * aggregate sees one row per document, and partial aggregation keeps
+    * the shuffle at one signature row (k longs ≈ 512 B) per document.
+    * Rows without shingles drop before the kernel, as the explode form
+    * emitted nothing for them. Then 16 bands of 4 rows: band
+    * fingerprint = hash of the band's 4 signature slots.
     * Shared by the in-corpus near-dup plan and the persisted signature
     * store of `llm_dedup_incremental` (same seeds ⇒ signatures comparable
     * across runs and days — the property an incremental store depends on). */
   private[graft] def bandedSigs(docs: DataFrame): DataFrame = {
-    val minCols = (0 until MinhashK).map { i =>
-      min(pmod(col("h") * hashA(i) + hashB(i), lit(P))).as(s"sig$i")
-    }
+    graft.api.Graft.register(docs.sparkSession)
+    val minCols = (0 until MinhashK).map(i => min(col("mh").getItem(i)).as(s"sig$i"))
     val sigs = docs
-      .select(col("doc_id"), explode(col("sh")).as("sv"))
-      .select(col("doc_id"), pmod(xxhash64(col("sv")), lit(P)).as("h"))
+      .filter(size(col("sh")) > 0)
+      .select(col("doc_id"), call_function("graft_minhash", col("sh")).as("mh"))
       .groupBy("doc_id")
       .agg(minCols.head, minCols.tail: _*)
     val bandStructs = (0 until Bands).map { j =>
@@ -1115,7 +1120,8 @@ object LlmOps {
     * point (Dedup.minhashPairs). */
   private[graft] def neardupPairsOf(shingledDocs: DataFrame, tau: Double): DataFrame = {
     // cache(): referenced by the signature build AND both sides of the
-    // exact-confirm join — uncached, the shingle transform runs 3×.
+    // exact-confirm join — one stage computes the shingles, the other two
+    // read the cached block.
     val docs = graft.GraftCaches.track(shingledDocs.cache())
     val banded = bandedSigs(docs)
 
@@ -1161,11 +1167,9 @@ object LlmOps {
     sys.env.getOrElse("SPARK_GRAFT_TEXT_HASH", "md5")
   private[graft] val Mask60 = "1152921504606846975L" // (1<<60)-1, SQL literal
 
-  /** (doc_id, harr): one 60-bit hash per whitespace token. The caller-side
-    * cache() is the measured-critical barrier: higher-order functions run
-    * interpreted (no codegen CSE) and CollapseProject would inline this
-    * pipeline into the 60-bit vote aggregate, recomputing it once PER BIT
-    * (measured: 104 s vs ~4 s at sf0.1 on the md5 path). */
+  /** (doc_id, harr): one 60-bit hash per whitespace token. The signature
+    * build reads `harr` once, in the `graft_simhash` kernel, so this
+    * pipeline may be inlined into it without running twice. */
   private def tokenHashes(s: SparkSession, d: String, hashImpl: String): DataFrame =
     tokenHashesOf(Tables.documentsWide(s, d), hashImpl)
 
@@ -1192,18 +1196,13 @@ object LlmOps {
   private[graft] def simhashSigs(s: SparkSession, d: String, hashImpl: String): DataFrame =
     simhashSigsOf(tokenHashes(s, d, hashImpl))
 
-  /** Same over any (doc_id, harr) token-hash frame (graft.api entry). */
+  /** Same over any (doc_id, harr) token-hash frame (graft.api entry): the
+    * `graft_simhash` majority vote, one pass over the tokens per row.
+    * Cached because the banding and both confirm sides read it. */
   private[graft] def simhashSigsOf(tokDf: DataFrame): DataFrame = {
-    val sigExpr = expr(
-      """aggregate(
-           transform(sequence(0, 59), b -> CASE WHEN
-             aggregate(harr, CAST(0 AS BIGINT),
-                       (acc, x) -> acc + 2 * ((x >> b) & 1) - 1) > 0
-             THEN shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT) END),
-           CAST(0 AS BIGINT), (a, b) -> a + b)""")
+    graft.api.Graft.register(tokDf.sparkSession)
     graft.GraftCaches.track(
-      graft.GraftCaches.track(tokDf.cache())
-        .select(col("doc_id"), sigExpr.as("sig"))
+      tokDf.select(col("doc_id"), call_function("graft_simhash", col("harr")).as("sig"))
         .cache())
   }
 
@@ -2041,12 +2040,13 @@ object LlmOps {
         .agg(max("c").as("mx"), sum("c").as("n_words"))
         .select(col("doc_id"), col("n_words"),
                 round(col("mx") / col("n_words"), 4).as("top_word_frac"))
-      val ws = split(col("text"), " ")
-      val g3 = docs.select(col("doc_id"),
-        when(size(ws) >= 3,
-          round(lit(1.0) - size(shingles(col("text"))).cast("double")
-                  / (size(ws) - lit(2)).cast("double"), 4))
-          .otherwise(lit(0.0)).as("dup3_frac"))
+      val ws = col("ws")
+      val g3 = docs.select(col("doc_id"), words(col("text")).as("ws"))
+        .select(col("doc_id"),
+          when(size(ws) >= 3,
+            round(lit(1.0) - size(shingles(ws)).cast("double")
+                    / (size(ws) - lit(2)).cast("double"), 4))
+            .otherwise(lit(0.0)).as("dup3_frac"))
       stats.join(g3, "doc_id")
         .withColumn("keep",
           col("top_word_frac") <= 0.12 && col("dup3_frac") <= 0.02)

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *  - everything here is per-document map work + small hash-aggs; the only
   *    joins are against per-language profiles (5 langs × top-50 trigrams —
   *    broadcast by construction);
-  *  - the fingerprint/kgram pipelines use the same "materialize the hash
-  *    array once per doc" barrier as llm_simhash — higher-order exprs run
-  *    interpreted, so CollapseProject duplication must be kept out.
+  *  - the fingerprint/kgram pipelines materialize the hash array once per
+  *    doc (a cache barrier) — higher-order exprs run interpreted, so
+  *    CollapseProject duplication must be kept out.
   */
 object TextOps {
   type Q = (SparkSession, String) => DataFrame
@@ -1545,8 +1545,8 @@ object TextOps {
   }
 
   /** (doc_id, fps): winnowing fingerprint sets (k=8 char-grams, window
-    * w=4) under the given hash impl. Same cache barrier as llm_simhash:
-    * the kgram hash array MUST materialize before the window-minima
+    * w=4) under the given hash impl. A cache barrier: the kgram hash
+    * array MUST materialize before the window-minima
     * expression (and on the md5 path, md5 runs ONCE per kgram via the
     * inner transform's lambda var — md5 inside the digit lambda would
     * recompute it 15× per kgram; measured 71 s vs ~3 s at sf0.1). */

@@ -42,6 +42,24 @@ class ImperativeRegistrationSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
     assert(collect(plan) { case j: AsOfJoinExec => j }.size === 1, plan)
   }
 
+  test("Dedup.minhashPairs / simhashPairs register their kernels themselves") {
+    import org.apache.spark.sql.functions._
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+    val mh = graft.api.Dedup.minhashPairs(docs).select("doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val sh = graft.ops.LlmOps.shingledOf(docs)
+    val allPairs = sh.select(col("doc_id").as("a"), col("sh").as("sa"))
+      .join(sh.select(col("doc_id").as("b"), col("sh").as("sb")), col("a") < col("b"))
+      .filter(size(array_intersect(col("sa"), col("sb"))) >=
+        lit(0.6) * size(array_union(col("sa"), col("sb"))))
+      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    assert(mh.nonEmpty && mh === allPairs)
+    val sim = graft.api.Dedup.simhashPairs(docs).collect()
+    assert(sim.nonEmpty && sim.forall(_.getLong(2) <= 4))
+    Seq("graft_minhash", "graft_simhash").foreach(f =>
+      assert(spark.catalog.functionExists(f), f))
+  }
+
   test("repeated dispatch registers each rule and strategy exactly once") {
     assert(spark.experimental.extraOptimizations === GraftExtensions.rules)
     assert(spark.experimental.extraStrategies === GraftExtensions.strategies)

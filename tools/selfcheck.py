@@ -13,6 +13,17 @@ import duckdb
 import pandas as pd
 import numpy as np
 
+# DuckDB's memory cap, as a share of the box's RAM: one restatement must
+# not take the whole box. A restatement over the cap fails with DuckDB's
+# out-of-memory error, which is reported as that key's failure.
+DUCKDB_MEMORY_SHARE = 0.5
+
+def cap_duckdb(con):
+    cores = len(os.sched_getaffinity(0))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET threads = {cores}")
+    con.execute(f"SET memory_limit = '{int(ram * DUCKDB_MEMORY_SHARE) >> 20}MB'")
+
 def load_tables(con, sf_dir):
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[:-8]
@@ -265,6 +276,7 @@ def main():
     sf_dir, out_dir = argv[0], argv[1]
     only = set(argv[2:])
     con = duckdb.connect()
+    cap_duckdb(con)
     con.execute("SET TimeZone='UTC'")
     load_tables(con, sf_dir)
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
