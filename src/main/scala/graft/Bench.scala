@@ -99,6 +99,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = LocalSpark.cpus
     val spark = LocalSpark.session()
+    // the data dir's footers against the declared schemas, once, untimed
+    Tables.checkSchemas(spark, sfDir)
 
     // ---- warmup / scaffold phase (timed separately, reported as `setup`)
     val s0 = System.nanoTime()

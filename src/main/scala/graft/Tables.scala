@@ -2,19 +2,93 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Central table access. Every query goes through here so scale-critical
-  * reader concerns (schema pinning, the events ns-timestamp workaround,
+  * reader concerns (the declared schemas, the `events` timestamp cast,
   * partition sizing) live in exactly one place.
+  *
+  * Every base table is read with its declared schema ([[schemas]], the
+  * FIXTURES.md declaration), so resolving a table runs no footer-inference
+  * job: a key's DataFrame is built on the driver without touching Spark's
+  * scheduler. A declared read does not catch every drift in the files — a
+  * retyped column fails at execution (PARQUET_COLUMN_DATA_TYPE_MISMATCH),
+  * but a declared column missing from the file reads as all-NULL with no
+  * error — so the entry points run [[checkSchemas]] once per data dir,
+  * before their first key.
   *
   * Scale note (100 TB): these are plain parquet scans — Catalyst handles
   * column pruning + predicate pushdown as long as callers keep filters and
-  * projections declarative. No collect(), no schema inference by sampling.
+  * projections declarative. No collect(), no schema inference per read.
   */
 object Tables {
-  /** Plain parquet table (all star-schema tables + documents/embeddings). */
+  private def fields(pairs: (String, DataType)*): StructType =
+    StructType(pairs.map { case (n, t) => StructField(n, t) })
+
+  /** The base tables' declared schemas (FIXTURES.md), in file column
+    * order. Parquet `timestamp[us]` columns written without a UTC
+    * adjustment (every testdata generation's `o_orderdate`, `l_shipdate`
+    * and `events.ts`) are TIMESTAMP_NTZ in Spark 4. */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> fields("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> fields("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "supplier" -> fields("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "customer" -> fields("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "part" -> fields("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType,
+      "p_size" -> IntegerType, "p_retailprice" -> DoubleType),
+    "orders" -> fields("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> fields("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "events" -> fields("event_id" -> LongType, "ts" -> TimestampNTZType,
+      "user_id" -> LongType, "event_type" -> StringType,
+      "value" -> DoubleType, "props" -> StringType),
+    "documents" -> fields("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> fields("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType)
+  )
+
+  private def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** A base table, read with its declared schema (no inference job). */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(schemas(name)).parquet(path(sfDir, name))
+
+  /** Footer check of every base table under `sfDir` against [[schemas]]:
+    * infers each table's schema from its files once (one job per table)
+    * and throws, naming every table and column that differs — a declared
+    * column missing from the file, a column of another type, or a column
+    * the declaration lacks. Run it once per data dir, outside any timed
+    * region: it is the inference the declared reads no longer do. */
+  def checkSchemas(spark: SparkSession, sfDir: String): Unit = {
+    val drift = schemas.toSeq.sortBy(_._1).flatMap { case (name, declared) =>
+      val found = spark.read.parquet(path(sfDir, name)).schema
+      val inFile = found.map(f => f.name -> f.dataType).toMap
+      declared.flatMap { f =>
+        inFile.get(f.name) match {
+          case None => Some(s"$name.${f.name}: declared ${f.dataType.sql}, missing from the file")
+          case Some(dt) if dt != f.dataType =>
+            Some(s"$name.${f.name}: declared ${f.dataType.sql}, file has ${dt.sql}")
+          case _ => None
+        }
+      } ++ found.filterNot(f => declared.fieldNames.contains(f.name))
+        .map(f => s"$name.${f.name}: in the file (${f.dataType.sql}), not declared")
+    }
+    if (drift.nonEmpty)
+      throw new IllegalStateException(
+        s"$sfDir: base-table schemas differ from Tables.schemas: ${drift.mkString("; ")}")
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -76,38 +150,14 @@ object Tables {
   def embeddingsWide(s: SparkSession, d: String): DataFrame =
     validVectors(wide(s, d, "embeddings"))
 
-  /** `events.parquet`'s `ts` physical type has varied across testdata
-    * generations — INT64 TIMESTAMP(NANOS) originally, TIMESTAMP_NTZ(µs)
-    * since the r9/r10 refresh — so this reader normalizes whatever it
-    * finds to ONE canonical shape every downstream query (and the DuckDB
-    * oracle, which reads the same file) agrees on: a session-TZ
-    * TimestampType column at µs precision.
-    *
-    *  - INT64 nanos: Spark 4.x refuses the column by default
-    *    (PARQUET_TYPE_ILLEGAL); `nanosAsLong` reads it as Long, then
-    *    INTEGER floor-division rebuilds µs (a double division would lose
-    *    precision above 2^53; `ts div 1000` alone truncates toward zero,
-    *    which differs from floor for pre-epoch negative nanos —
-    *    `(ts - pmod(ts,1000)) div 1000` is exact floor for any sign).
-    *    DuckDB floors ns→µs the same way.
-    *  - TIMESTAMP_NTZ (the current files): cast to TimestampType. The
-    *    session TZ is pinned UTC by every entry point, so the cast is
-    *    wall-clock-identity and matches DuckDB's naive TIMESTAMP read.
-    *
-    * Invariant: `nanosAsLong` is set SESSION-WIDE here and never unset.
-    * That is safe in this codebase because no OTHER table carries an
-    * INT64 TIMESTAMP(NANOS) column (SchemaPinSpec pins every other
-    * table's schema, so a ns column sneaking into one of them fails the
-    * suite rather than silently reading as Long). */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw // already session-TZ µs
-    }
-  }
+  /** `events`, read with its declared `ts TIMESTAMP_NTZ` (the files hold
+    * parquet `timestamp[us]` without a UTC adjustment) and cast to the
+    * session-TZ TimestampType every downstream query and the DuckDB
+    * oracle agree on. The session TZ is pinned UTC by every entry point,
+    * so the cast is wall-clock identity and matches DuckDB's naive
+    * TIMESTAMP read. A file whose `ts` has another physical type (INT64
+    * TIMESTAMP(NANOS) in an early testdata generation) is refused: by
+    * [[checkSchemas]], or at read time. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    t(spark, sfDir, "events").withColumn("ts", col("ts").cast(TimestampType))
 }

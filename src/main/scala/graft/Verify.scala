@@ -15,6 +15,9 @@ object Verify {
     // so its oracle strings are byte-identical to before.
     System.setProperty("graft.oracle.sfdir", sfDir)
     val spark = LocalSpark.session()
+    // every key reads the base tables with their declared schemas, so a
+    // drifted file must stop the run here rather than read as NULLs
+    Tables.checkSchemas(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     val selected =
       if (keyFilter.isEmpty) SparkEntry.queries

@@ -468,11 +468,20 @@ object WebOps {
     * first adjacency index with a higher-order filter over an index
     * sequence, slice, re-join): zero shuffle, zero UDF; composes after
     * [[phraseSearch]] has already narrowed WHICH docs to snippet, so the
-    * text scan runs on the hit set, not the corpus. */
+    * text scan runs on the hit set, not the corpus.
+    *
+    * Linear per row, one split: a document can only match if its text
+    * contains "a b", so that substring test runs first (it reaches the
+    * scan as a pushed filter) and only its survivors are split. The word
+    * array is projected once and the lambda indexes that column. The
+    * first match comes out of an `explode` of the matches' first element,
+    * which yields no row for a document without one: a `size(starts) > 0`
+    * Filter would be pushed below the projections and evaluate the whole
+    * match expression (and the split, once per `element_at`) again. */
   private[graft] def snippetOf(docs: DataFrame, idCol: String, textCol: String,
                                a: String, b: String, ctx: Int): DataFrame = {
-    val ws = split(col(textCol), " ")
-    // 1-based index i of the first token pair (ws[i], ws[i+1]) == (a, b).
+    val ws = col("ws")
+    // 1-based index i of each token pair (ws[i], ws[i+1]) == (a, b).
     // The size >= 2 guard matters: sequence(1, 0) DESCENDS to [1, 0] and
     // the lambda would evaluate element_at(ws, 0) — a hard error — on any
     // single-token doc (same guard idiom as llm_ngram's bigram builder).
@@ -480,17 +489,15 @@ object WebOps {
       filter(sequence(lit(1), size(ws) - 1),
         i => element_at(ws, i) === a && element_at(ws, i + 1) === b))
       .otherwise(array().cast("array<int>"))
-    docs.select(col(idCol).as("doc_id"), ws.as("ws"), starts.as("starts"))
-      .filter(size(col("starts")) > 0)
+    val first = col("first")
+    // window = ctx + 2-token phrase + ctx, clipped at the left edge so the
+    // slice never starts before token 1
+    val from = greatest(lit(1), first - ctx)
+    docs.filter(col(textCol).contains(s"$a $b"))
+      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
+      .select(col("doc_id"), ws, explode(slice(starts, 1, 1)).as("first"))
       .select(col("doc_id"),
-        array_join(
-          slice(col("ws"),
-                greatest(lit(1), element_at(col("starts"), 1) - ctx),
-                // window = ctx + 2-token phrase + ctx, clipped at the left
-                // edge so the slice never starts before token 1
-                element_at(col("starts"), 1) + 1 + ctx -
-                  greatest(lit(1), element_at(col("starts"), 1) - ctx) + 1),
-          " ").as("snippet"))
+        array_join(slice(ws, from, first + 1 + ctx - from + 1), " ").as("snippet"))
   }
 
   /** Per-(JVM, sfDir) positional index store (StoreDir.fixed contract). */

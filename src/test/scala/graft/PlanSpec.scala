@@ -266,6 +266,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlan
     spark.catalog.clearCache()
   }
 
+  test("snippetOf splits each candidate once and never re-evaluates the match") {
+    import graft.ops.WebOps
+    val snip = WebOps.snippetOf(Tables.documentsWide(spark, d), "doc_id", "text",
+      WebOps.PhraseTerms(0), WebOps.PhraseTerms(1), WebOps.SnippetContext)
+    val p = snip.queryExecution.optimizedPlan
+    assert("split\\(".r.findAllIn(p.toString).length === 1, p)
+    // the only Filter is the substring prefilter, never the lambda match
+    assert(p.collect { case f: Filter => f }
+      .forall(!_.condition.toString.contains("lambdafunction")), p)
+  }
+
   test("llm_dedup_incremental reads the day-1 signature store, not a rebuild") {
     // the incremental contract: day-1 signatures AND day-1 shingle sets
     // come from the persisted store's parquet (two scans of the sigstore

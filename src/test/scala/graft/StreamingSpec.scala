@@ -372,6 +372,23 @@ class StreamingSpec extends AnyFunSuite {
       "no null-match rows — watermark never evicted unmatched purchases")
   }
 
+  test("stream_stream_outer drops a NULL-user_id purchase (engine contract)") {
+    // the symmetric-hash join keys its state by user_id, so a NULL-key
+    // purchase never enters the state and is not null-filled at eviction;
+    // the oracle restates that as `user_id IS NOT NULL`
+    val ev = Tables.t(spark, d, "events")
+    val nullId = 1000000L
+    val nullKey = ev.filter(col("event_type") === "purchase").orderBy("event_id").limit(1)
+      .withColumn("event_id", lit(nullId))
+      .withColumn("user_id", lit(null).cast("long"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_nullkey_").toString
+    ev.unionByName(nullKey).coalesce(1).write.parquet(s"$dir/events.parquet")
+    assert(Tables.events(spark, dir).filter(col("user_id").isNull).count() === 1)
+    val out = StreamOps.queries("stream_stream_outer")(spark, dir).collect()
+    assert(!out.exists(_.getLong(0) == nullId), "NULL-key purchase reached the output")
+    assert(out.toSeq === StreamOps.queries("stream_stream_outer")(spark, d).collect().toSeq)
+  }
+
   test("stream_file_sink equals batch aggregation (exactly-once file sink)") {
     val streamed = StreamOps.queries("stream_file_sink")(spark, d).collect()
     val batch = Tables.events(spark, d)

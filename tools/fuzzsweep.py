@@ -142,6 +142,7 @@ def main():
             continue
         name = f[:-8]
         t = pq.read_table(os.path.join(SRC, f))
+        src_types = [(c.name, c.type) for c in t.schema]
         n = t.num_rows
         notes = []
         # 1. the NULL plan
@@ -213,6 +214,13 @@ def main():
             notes.append(f"+{len(dup)} content-dup rows (fresh ids)")
         if notes:
             print(f"{name}: {', '.join(notes)} ({t.num_rows} rows)")
+        # Spark reads the copy with the declared schemas (Tables.schemas),
+        # which the source matches: no column may change its arrow type
+        got = [(c.name, c.type) for c in t.schema]
+        if got != src_types:
+            diff = [f"{a[0]}: {a[1]} -> {b[1]}" if a[0] == b[0] else f"{a} -> {b}"
+                    for a, b in zip(src_types, got) if a != b]
+            sys.exit(f"{name}: the fuzzed copy changed column types: {diff or got}")
         pq.write_table(t, os.path.join(DST, f))
     print(f"-> {DST} (seed {SEED}"
           + ("" if SEED else " = pinned plan") + ")")
