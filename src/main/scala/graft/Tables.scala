@@ -72,22 +72,27 @@ object Tables {
     * the declaration lacks. Run it once per data dir, outside any timed
     * region: it is the inference the declared reads no longer do. */
   def checkSchemas(spark: SparkSession, sfDir: String): Unit = {
-    val drift = schemas.toSeq.sortBy(_._1).flatMap { case (name, declared) =>
-      val found = spark.read.parquet(path(sfDir, name)).schema
-      val inFile = found.map(f => f.name -> f.dataType).toMap
-      declared.flatMap { f =>
-        inFile.get(f.name) match {
-          case None => Some(s"$name.${f.name}: declared ${f.dataType.sql}, missing from the file")
-          case Some(dt) if dt != f.dataType =>
-            Some(s"$name.${f.name}: declared ${f.dataType.sql}, file has ${dt.sql}")
-          case _ => None
-        }
-      } ++ found.filterNot(f => declared.fieldNames.contains(f.name))
-        .map(f => s"$name.${f.name}: in the file (${f.dataType.sql}), not declared")
-    }
+    val drift = schemas.keys.toSeq.sorted.flatMap(schemaDrift(spark, sfDir, _))
     if (drift.nonEmpty)
       throw new IllegalStateException(
         s"$sfDir: base-table schemas differ from Tables.schemas: ${drift.mkString("; ")}")
+  }
+
+  /** The differences of one table's footer schema under `sfDir` from its
+    * declaration, one `table.column: ...` line each (empty when none). */
+  def schemaDrift(spark: SparkSession, sfDir: String, name: String): Seq[String] = {
+    val declared = schemas(name)
+    val found = spark.read.parquet(path(sfDir, name)).schema
+    val inFile = found.map(f => f.name -> f.dataType).toMap
+    declared.flatMap { f =>
+      inFile.get(f.name) match {
+        case None => Some(s"$name.${f.name}: declared ${f.dataType.sql}, missing from the file")
+        case Some(dt) if dt != f.dataType =>
+          Some(s"$name.${f.name}: declared ${f.dataType.sql}, file has ${dt.sql}")
+        case _ => None
+      }
+    } ++ found.filterNot(f => declared.fieldNames.contains(f.name))
+      .map(f => s"$name.${f.name}: in the file (${f.dataType.sql}), not declared")
   }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")

@@ -29,6 +29,14 @@ class SchemaPinSpec extends AnyFunSuite {
     sfDirs.foreach(Tables.checkSchemas(spark, _))
   }
 
+  // one pin per table, so a drifted table is named by the failing test
+  Tables.schemas.keys.toSeq.sorted.foreach { name =>
+    test(s"schema pin: $name") {
+      val drift = sfDirs.flatMap(dir => Tables.schemaDrift(spark, dir, name).map(m => s"$dir: $m"))
+      assert(drift.isEmpty, drift.mkString("; "))
+    }
+  }
+
   /** A copy of the sf0.001 dir with `lineitem` rewritten by `f`. */
   private def driftedCopy(f: DataFrame => DataFrame): String = {
     val dir = Files.createTempDirectory("graft-schemadrift-")
