@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{CosineSimilarity, MinHashSignature, PosTokenize, SimHashVote}
 import graft.plans.{AsOfJoinStrategy, AsOfSqlParser, CosineBandedJoin, HammingBandedJoin, MvRewrite}
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
@@ -16,11 +17,13 @@ import org.apache.spark.sql.execution.SparkStrategy
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * injects everything the companion declares into every session built
-  * from that config, plus the `ASOF [LEFT] JOIN` SQL parser, which only a
-  * session built with the extension can carry. Sessions built without it
-  * get the same functions, rules and strategies from
-  * [[graft.api.Graft.register]].
+  * injects the functions, rules and strategies the companion declares into
+  * every session built from that config, plus the `ASOF [LEFT] JOIN` SQL
+  * parser, which only a session built with the extension can carry.
+  * Sessions built without it get the same functions, rules and strategies
+  * from [[graft.api.Graft.register]]. The companion's checkpoint file
+  * manager is a session conf, not an injection: [[graft.LocalSpark]] sets
+  * it at build time and `Graft.register` on a session that has none.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -61,4 +64,13 @@ object GraftExtensions {
 
   /** Plans `graft.plans.AsOfJoin` nodes as the native `AsOfJoinExec`. */
   val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy)
+
+  /** Spark's `spark.sql.streaming.checkpointFileManagerClass`, set to the
+    * manager that writes local checkpoints through java.nio (no `chmod`
+    * process per file) and leaves every other scheme to Spark's own.
+    * `CheckpointFileManager.create` reads it from the session's Hadoop
+    * conf, so it covers the offset and commit logs, stream metadata, the
+    * state stores, state-schema metadata and the file sink's log. */
+  val checkpointFileManager: (String, String) =
+    LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName
 }

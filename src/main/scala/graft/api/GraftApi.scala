@@ -26,8 +26,14 @@ object Graft {
     * Rules go to `experimental.extraOptimizations` (the batch after the
     * main optimizer, when predicates sit in join conditions, the shape the
     * matchers target); strategies to `experimental.extraStrategies`. A
-    * session built with the extension gets nothing a second time. */
+    * session built with the extension gets nothing a second time. The
+    * checkpoint file manager is set only where neither the session nor
+    * the Hadoop conf names one: a manager the user chose wins. */
   def register(spark: SparkSession): Unit = {
+    val (ckptKey, ckptManager) = GraftExtensions.checkpointFileManager
+    if (spark.conf.getOption(ckptKey).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(ckptKey) == null)
+      spark.conf.set(ckptKey, ckptManager)
     val registry = spark.sessionState.functionRegistry
     GraftExtensions.functions.foreach { case (id, info, build) =>
       if (!registry.functionExists(id)) registry.registerFunction(id, info, build)

@@ -20,15 +20,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SqlOps {
   type Q = (SparkSession, String) => DataFrame
 
-  private def views(s: SparkSession, d: String): Unit = {
-    Tables.customer(s, d).createOrReplaceTempView("customer_m")
-    Tables.orders(s, d).createOrReplaceTempView("orders_m")
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_m")
-    Tables.supplier(s, d).createOrReplaceTempView("supplier_m")
-    Tables.part(s, d).createOrReplaceTempView("part_m")
-    Tables.nation(s, d).createOrReplaceTempView("nation_m")
-    Tables.region(s, d).createOrReplaceTempView("region_m")
-    Tables.events(s, d).createOrReplaceTempView("events_m")
+  /** The base tables as the `<table>_m` temp views the SQL text reads. */
+  private val views: Seq[(String, Q)] = Seq(
+    "customer_m" -> Tables.customer, "orders_m" -> Tables.orders,
+    "lineitem_m" -> Tables.lineitem, "supplier_m" -> Tables.supplier,
+    "part_m" -> Tables.part, "nation_m" -> Tables.nation,
+    "region_m" -> Tables.region, "events_m" -> Tables.events)
+
+  /** `s.sql(text)` over the views `text` names, registered first; a key
+    * resolves only the tables it reads. */
+  private def sql(s: SparkSession, d: String, text: String,
+                  args: Map[String, Any] = Map.empty): DataFrame = {
+    views.foreach { case (v, t) =>
+      if (s"\\b$v\\b".r.findFirstIn(text).isDefined) t(s, d).createOrReplaceTempView(v)
+    }
+    if (args.isEmpty) s.sql(text) else s.sql(text, args)
   }
 
   /** sql_recursive_cte hop clamp — see the key's doc for why it is
@@ -39,8 +45,7 @@ object SqlOps {
     // TPC-H Q3 shape: shipping-priority revenue — 3-way join, grouped
     // revenue, deterministic top-10 (revenue DESC with unique tiebreaker).
     "sql_q3_shipping" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT l_orderkey,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
                o_orderdate, o_orderpriority
@@ -63,8 +68,7 @@ object SqlOps {
     // user-keyed aggregations + two broadcast-sized joins (per-user stage
     // timestamps are one row each) — no window over the raw log.
     "sql_event_funnel" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         WITH v AS (
           SELECT user_id, min(ts) AS ts_v FROM events_m
           WHERE event_type = 'view' GROUP BY user_id),
@@ -90,8 +94,7 @@ object SqlOps {
     // counts; at 100 TB the distinct is the only raw-log shuffle and it
     // pre-aggregates map-side.
     "sql_retention_cohort" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         WITH uw AS (
           SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events_m)
         SELECT a.wk AS cohort_week,
@@ -112,8 +115,7 @@ object SqlOps {
     // hand-written join would give, proving subquery SQL costs nothing at
     // scale. Output re-aggregated per part for determinism.
     "sql_correlated_scalar" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT l_partkey, count(*) AS n_above,
                round(sum(l_extendedprice), 2) AS rev_above
         FROM lineitem_m l1
@@ -128,8 +130,7 @@ object SqlOps {
     // TPC-H Q5 shape: local-supplier revenue per nation — 6-way star join
     // (customer and supplier must share the nation), region + date filters.
     "sql_q5_local_revenue" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT n_name,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         FROM customer_m
@@ -154,8 +155,7 @@ object SqlOps {
     // a broadcast at runtime — the big tables shuffle once for their own
     // join, never for the qualification.
     "sql_q18_large_orders" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                round(sum(l_quantity), 2) AS total_qty
         FROM customer_m
@@ -176,8 +176,7 @@ object SqlOps {
     // — the correlated per-row subquery costs nothing extra at scale.
     // Scoped to one mktsegment's customers so output stays bounded.
     "sql_lateral_topk" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         FROM customer_m c,
         LATERAL (
@@ -215,7 +214,6 @@ object SqlOps {
     // 5% of the whole bench; VERDICT r13 #8). Never derive the base
     // relation inside the loop: the walk itself is milliseconds.
     "sql_recursive_cte" -> ((s, d) => {
-      views(s, d)
       val e = GraphOps.repeatTradeEdges(s, d).cache()
       graft.GraftCaches.track(e)
       e.createOrReplaceTempView("walk_edges_m")
@@ -241,8 +239,7 @@ object SqlOps {
     // the predicate needs both sides, so it evaluates right after the two
     // broadcast joins, before the one real shuffle (the grouped agg).
     "sql_q7_volume" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                year(l_shipdate) AS l_year,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -271,8 +268,7 @@ object SqlOps {
     // construction (and is how money should be summed anyway); the final
     // cast back to DOUBLE keeps the cross-engine output type aligned.
     "sql_q10_returns" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c_custkey, c_name, n_name,
                CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))
                               * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2)
@@ -302,8 +298,7 @@ object SqlOps {
     // quantity bands before the join rather than filtering after it. OR
     // does not disable pushdown when every arm constrains the same scan.
     "sql_q19_disjunctive" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT p_brand, count(*) AS n,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         FROM lineitem_m
@@ -324,8 +319,7 @@ object SqlOps {
     // the two arms union into one (grp, n) frame (the Z- prefix keeps the
     // synthetic row ordered after the priorities).
     "sql_exists_in" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         WITH q4 AS (
           SELECT o_orderpriority AS grp, count(*) AS n
           FROM orders_m o
@@ -352,10 +346,9 @@ object SqlOps {
     // inlined — which is also why the oracle IS the inlined literal.
     // DECLARE OR REPLACE keeps repeat invocations idempotent.
     "sql_session_variable" -> ((s, d) => {
-      views(s, d)
       s.sql("DECLARE OR REPLACE VARIABLE graft_price_floor DOUBLE DEFAULT 0.0")
       s.sql("SET VARIABLE graft_price_floor = 350000.0")
-      s.sql("""
+      sql(s, d, """
         SELECT o_orderpriority, count(*) AS n,
                round(sum(o_totalprice), 2) AS rev
         FROM orders_m
@@ -377,8 +370,7 @@ object SqlOps {
     // WHERE key > last_seen — is the 100 TB shape; this key is the
     // bounded-page form).
     "sql_limit_offset" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT o_orderkey, o_totalprice, o_orderpriority
         FROM orders_m
         ORDER BY o_totalprice DESC, o_orderkey ASC
@@ -398,8 +390,7 @@ object SqlOps {
     // many urgent orders match). PlanSpec pins ExistenceJoin in the
     // optimized plan.
     "sql_exists_mark" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c_custkey, c_acctbal
         FROM customer_m c
         WHERE c_acctbal < 0
@@ -418,8 +409,7 @@ object SqlOps {
     // output width is fixed at plan time (an open-ended pivot at 100 TB
     // means an extra corpus pass just to learn the columns).
     "sql_pivot_clause" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT * FROM (
           SELECT year(o_orderdate) AS yr, o_orderpriority, o_totalprice
           FROM orders_m
@@ -442,8 +432,7 @@ object SqlOps {
     // the long form a direct GROUP BY produces — the oracle states that
     // equivalence.
     "sql_unpivot_clause" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT yr, band, rev FROM (
           SELECT CAST(year(o_orderdate) AS INT) AS yr,
                  round(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END), 2) AS urgent,
@@ -467,8 +456,7 @@ object SqlOps {
     // free, which is exactly the determinism the cross-engine gate needs.
     // DuckDB spells the same pair EXCLUDE / ORDER BY ALL.
     "sql_star_except" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT * EXCEPT (o_orderstatus, o_orderdate)
         FROM orders_m
         WHERE o_totalprice > 400000
@@ -486,8 +474,7 @@ object SqlOps {
     // hint on the same text. Hints change the PLAN, never the result —
     // the oracle is the plain unhinted SQL.
     "sql_join_hints" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT /*+ SHUFFLE_MERGE(o) */
                o_orderpriority, count(*) AS n,
                round(sum(l_extendedprice), 2) AS rev
@@ -505,8 +492,7 @@ object SqlOps {
     // The bound literals then behave exactly like inline ones (the segment
     // filter pushes to the customer scan).
     "sql_parameterized" -> ((s, d) => {
-      views(s, d)
-      s.sql(
+      sql(s, d,
         """
         SELECT n_name, count(*) AS n, round(sum(o_totalprice), 2) AS rev
         FROM customer_m
@@ -527,8 +513,7 @@ object SqlOps {
     // the shape monitoring rollups take at 100 TB: N boolean breakdowns =
     // N conditional sums in a single pass.
     "sql_q12_priority_bands" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT l_linestatus,
                sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                         THEN 1 ELSE 0 END) AS high_lines,
@@ -548,8 +533,7 @@ object SqlOps {
     // The month filter pushes to the lineitem scan, so at 100 TB the join
     // touches one month of the fact table, not the corpus.
     "sql_q14_promo" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
                                       THEN l_extendedprice * (1 - l_discount)
                                       ELSE 0.0 END)
@@ -572,8 +556,7 @@ object SqlOps {
     // equi-only EXISTS/NOT-IN pair; this key pins the non-equi
     // correlation surviving decorrelation.)
     "sql_q4_late_orders" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT o_orderpriority, count(*) AS order_count
         FROM orders_m o
         WHERE o_orderdate >= TIMESTAMP '1996-01-01'
@@ -597,8 +580,7 @@ object SqlOps {
     // the threshold rounds 4dp on both engines so double-avg
     // reassociation can't flip a boundary line.
     "sql_q17_small_qty" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)))
                           AS DOUBLE) / 7.0, 2) AS avg_yearly,
                count(*) AS n_lines
@@ -619,8 +601,7 @@ object SqlOps {
     // rounded to 4dp on both engines so double-avg reassociation noise
     // cannot flip a boundary customer.
     "sql_q22_global_scalar" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c_nationkey, count(*) AS n_cust,
                round(sum(c_acctbal), 2) AS total_bal
         FROM customer_m c
@@ -649,8 +630,7 @@ object SqlOps {
     // The schema has no o_comment, so the canonical NOT-LIKE-promo ON
     // filter becomes the equivalent selectivity class on o_orderpriority.
     "sql_q13_cust_distribution" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c_count, count(*) AS custdist
         FROM (SELECT c_custkey, count(o_orderkey) AS c_count
               FROM customer_m LEFT OUTER JOIN orders_m
@@ -672,8 +652,7 @@ object SqlOps {
     // executed per-row (PlanSpec pins both join types and the absence of
     // any correlated-subquery re-execution). supplier⋈nation broadcast.
     "sql_q21_suppliers_waiting" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT s_name, count(*) AS numwait
         FROM supplier_m
         JOIN lineitem_m l1 ON s_suppkey = l1.l_suppkey
@@ -706,10 +685,9 @@ object SqlOps {
     // (date band pushed to the scan), supplier dim broadcast, and the max
     // runs over the 100-row aggregate, not the fact.
     "sql_q15_top_supplier" -> ((s, d) => {
-      views(s, d)
       // r20: revenue referenced twice (join + max scalar) —
       // materialized once, same rationale and oracle proof as sql_q2
-      LlmOps.cutLineage(s.sql("""
+      LlmOps.cutLineage(sql(s, d, """
         SELECT l_suppkey AS supplier_no,
                CAST(sum(CAST(l_extendedprice * (1 - l_discount)
                              AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
@@ -721,7 +699,7 @@ object SqlOps {
              (NOT isnan(l_discount) AND abs(l_discount) < CAST('Infinity' AS DOUBLE)))
         GROUP BY l_suppkey"""))
         .createOrReplaceTempView("graft_q15_revenue")
-      s.sql("""
+      sql(s, d, """
         WITH revenue AS (SELECT * FROM graft_q15_revenue)
         SELECT s_suppkey, s_name, round(total_revenue, 2) AS total_revenue
         FROM supplier_m JOIN revenue ON s_suppkey = supplier_no
@@ -737,8 +715,7 @@ object SqlOps {
     // coalesce), the running total is a sequential ROWS frame so its
     // double sum is order-deterministic in both engines.
     "sql_window_clause" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT o_custkey, o_orderkey, o_totalprice,
                rank() OVER w AS rnk,
                round(sum(o_totalprice) OVER w2, 2) AS run_total
@@ -762,8 +739,7 @@ object SqlOps {
     // (Verify/Bench/TestSpark all are — a parser cannot be injected into an
     // existing session). Same query and oracle as join_asof_native.
     "sql_asof" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT p.event_id, p.user_id, p.ts, s.ts AS signup_ts
         FROM (SELECT * FROM events_m WHERE event_type = 'purchase') p
         ASOF JOIN (SELECT * FROM events_m WHERE event_type = 'signup') s
@@ -779,8 +755,7 @@ object SqlOps {
     // EXCEPT as a LeftAnti over the deduped sides — set semantics, no
     // full materialized distinct-union anywhere.
     "sql_set_ops" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT c_custkey FROM customer_m WHERE c_acctbal > 5000
         INTERSECT
         SELECT o_custkey FROM orders_m WHERE o_orderpriority = '1-URGENT'
@@ -797,8 +772,7 @@ object SqlOps {
     // two flag columns, bounded output. Both engines implement the same
     // resolution rule, so the text runs unchanged.
     "sql_group_by_all" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT l_returnflag, l_linestatus,
                count(*) AS n_lines,
                round(sum(l_quantity), 2) AS total_qty
@@ -818,8 +792,7 @@ object SqlOps {
     // … AS w(…)`; DuckDB wants parentheses — the oracle differs only in
     // that spelling.
     "sql_values_inline" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT w.prio, w.weight, count(*) AS n_orders,
                CAST(round(sum(CAST(o_totalprice * w.weight
                                    AS DECIMAL(18,4))), 2) AS DOUBLE)
@@ -844,8 +817,7 @@ object SqlOps {
     // accumulates in DECIMAL(18,4) so the two engines' sum order cannot
     // produce different 2dp roundings.
     "sql_q6_forecast_revenue" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT CAST(CAST(sum(CAST(l_extendedprice * l_discount
                                   AS DECIMAL(18,4))) AS DOUBLE) AS DOUBLE)
                  AS revenue,
@@ -868,7 +840,6 @@ object SqlOps {
     // (partkey, suppkey). Unit cost rounds 4dp BEFORE the min so the
     // equality filter compares identically-constructed doubles.
     "sql_q2_min_cost" -> ((s, d) => {
-      views(s, d)
       // r20: materializing the twice-referenced partsupp CTE was
       // measured NEUTRAL-TO-WORSE here (1.53 -> ~1.7 s, unlike
       // q11/q15): the correlated min-cost subquery's decorrelated
@@ -886,7 +857,7 @@ object SqlOps {
       // (no map-side partials) — a win only while the fixture's ~1
       // group per input row holds; if a larger SF grows duplicates per
       // (partkey, suppkey), re-measure and gate on rows-per-group.
-      s.sql(s"""
+      sql(s, d, s"""
         WITH partsupp AS (
           SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
                  min(round(l_extendedprice / l_quantity, 4)) AS ps_supplycost
@@ -924,8 +895,7 @@ object SqlOps {
     // shuffles are lineitem⋈orders on orderkey and orders⋈customer on
     // custkey.
     "sql_q8_market_share" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT o_year,
                round(CAST(sum(CASE WHEN supp_nation = 'NATION_3'
                                    THEN volume
@@ -964,8 +934,7 @@ object SqlOps {
     // sum; the LIKE filter prunes part BEFORE the join so only matching
     // parts' lineitems survive the partkey shuffle.
     "sql_q9_product_profit" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT nation, o_year,
                CAST(round(sum(amount), 2) AS DOUBLE) AS sum_profit
         FROM (
@@ -998,10 +967,9 @@ object SqlOps {
     // DECIMAL end-to-end (both sums exact); only the final output casts to
     // DOUBLE.
     "sql_q11_important_stock" -> ((s, d) => {
-      views(s, d)
       // r20: partsupp referenced twice (main agg + HAVING scalar) —
       // materialized once, same rationale and oracle proof as sql_q2
-      LlmOps.cutLineage(s.sql("""
+      LlmOps.cutLineage(sql(s, d, """
         SELECT l_partkey AS ps_partkey,
                sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS ps_value
         FROM lineitem_m
@@ -1030,8 +998,7 @@ object SqlOps {
     // group key with partial distinct applied map-side. The part dim
     // filters (brand/type/size set) prune before the join.
     "sql_q16_parts_supplier" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT p_brand, p_type, p_size,
                count(DISTINCT l_suppkey) AS supplier_cnt
         FROM lineitem_m JOIN part_m ON p_partkey = l_partkey
@@ -1055,8 +1022,7 @@ object SqlOps {
     // doubles, so every sum is IEEE-exact and the 0.5× comparison is
     // deterministic cross-engine.
     "sql_q20_potential_promo" -> ((s, d) => {
-      views(s, d)
-      s.sql("""
+      sql(s, d, """
         SELECT s_suppkey, s_name
         FROM supplier_m JOIN nation_m ON s_nationkey = n_nationkey
         WHERE n_name LIKE 'NATION_1%'

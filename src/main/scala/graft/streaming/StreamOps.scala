@@ -36,6 +36,15 @@ import java.util.concurrent.atomic.AtomicInteger
   *  - chunking/sentinels/memory-sink are REPLAY SCAFFOLDING for the oracle
   *    gate, not the production path: in production the same transforms bind
   *    to a Kafka/file source and a parquet/Kafka sink unchanged.
+  *
+  * Checkpoints: each query gets a fresh local dir from `withCheckpoint`,
+  * deleted once the key's last query on it has terminated. Its files are
+  * written by [[LocalCheckpointFileManager]] (declared in
+  * `GraftExtensions`, set by `LocalSpark` and `Graft.register`): offset and
+  * commit logs, stream metadata, state-store files and the file sink's
+  * `_spark_metadata` log go through java.nio, with no `chmod` process per
+  * file and no `.crc` twins. A checkpoint on HDFS or an object store is
+  * written by Spark's own manager, unchanged.
   */
 object StreamOps {
   type Q = (SparkSession, String) => DataFrame
@@ -291,14 +300,15 @@ object StreamOps {
               col("ts").as(s"${p}_ts"))
       .withWatermark(s"${p}_ts", "1 minute")
     val name = s"graft_warm_ss_${nameCounter.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft-warm-ckpt-").toFile.getAbsolutePath
-    val q = side("purchase", "p").join(side("signup", "s"),
-        col("p_user") === col("s_user") && col("s_ts") <= col("p_ts"),
-        "left_outer")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    withCheckpoint("graft-warm-ckpt-") { ckpt =>
+      side("purchase", "p").join(side("signup", "s"),
+          col("p_user") === col("s_user") && col("s_ts") <= col("p_ts"),
+          "left_outer")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
     spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 
@@ -343,6 +353,16 @@ object StreamOps {
       topic
     })
 
+  /** Runs `body` with a fresh checkpoint dir (`prefix` plus a random
+    * suffix under `java.io.tmpdir`) and deletes the dir when `body` returns
+    * or throws. `body` starts and awaits every query of that checkpoint;
+    * the result lives in the memory sink, a sink dir or a JDBC table, never
+    * in the checkpoint. */
+  private def withCheckpoint[T](prefix: String = "graft-ckpt-")(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString) finally LocalCheckpointFileManager.deleteTree(dir)
+  }
+
   /** Builds the replay file source, starts whatever query `start`
     * assembles and waits for it — the scaffolding shared by the
     * memory-sink runner and the file/JDBC sink keys.
@@ -382,14 +402,15 @@ object StreamOps {
                         filesPerTrigger: Int = 1)(
       build: DataFrame => DataFrame): DataFrame = {
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-    runReplay(spark, rep, filesPerTrigger) { src =>
-      build(src).writeStream
-        .format("memory").queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    withCheckpoint() { ckpt =>
+      runReplay(spark, rep, filesPerTrigger) { src =>
+        build(src).writeStream
+          .format("memory").queryName(name)
+          .outputMode(outputMode)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
     }
     spark.table(name)
   }
@@ -411,7 +432,6 @@ object StreamOps {
                                 expectedRows: Long, filesPerTrigger: Int = 1)(
       build: DataFrame => DataFrame): DataFrame = {
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
     val src = spark.readStream
       .schema(rep.schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
@@ -429,7 +449,7 @@ object StreamOps {
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
-    try {
+    try withCheckpoint() { ckpt =>
       val q = build(src).writeStream
         .format("memory").queryName(name)
         .outputMode(outputMode)
@@ -687,7 +707,6 @@ object StreamOps {
     val rep = replay(s, d, "flush")
     val mfpt = if (isOuter) 1 else 2
     val name = s"graft_stream_ss_${nameCounter.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
     def srcStream = s.readStream.schema(rep.schema)
       .option("maxFilesPerTrigger", mfpt).parquet(rep.srcDir)
     def side(t: String, idAs: String, userAs: String, tsAs: String) = {
@@ -702,8 +721,8 @@ object StreamOps {
       .withWatermark("s_ts", "1 hour")
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", 2)
-    try {
-      val q = purchases.join(signups,
+    try withCheckpoint() { ckpt =>
+      purchases.join(signups,
           col("p_user") === col("s_user") &&
           col("s_ts") <= col("p_ts") &&
           col("s_ts") >= col("p_ts") - expr("INTERVAL 7 DAYS"),
@@ -715,7 +734,7 @@ object StreamOps {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
@@ -798,10 +817,9 @@ object StreamOps {
       val rep = replay(s, d, "base")
       val (dirA, dirB) = unionDirs(s, d)
       val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-      val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", 2)
-      try {
+      try withCheckpoint() { ckpt =>
         def src(dir: String) = s.readStream.schema(rep.schema)
           .option("maxFilesPerTrigger", 1).parquet(dir)
         src(dirA).unionByName(src(dirB))
@@ -1132,15 +1150,16 @@ object StreamOps {
     "stream_file_sink" -> ((s, d) => {
       val rep = replay(s, d, "flush")
       val outDir = Files.createTempDirectory("graft-fsink-").toFile.getAbsolutePath
-      val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-      runReplay(s, rep, 1) { src =>
-        windowAgg(src)
-          .writeStream.format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
+      withCheckpoint() { ckpt =>
+        runReplay(s, rep, 1) { src =>
+          windowAgg(src)
+            .writeStream.format("parquet")
+            .option("path", outDir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
       }
       sinkResult(s.read.parquet(outDir))
     }),
@@ -1162,7 +1181,6 @@ object StreamOps {
       val rep = replay(s, d, "base") // real events only, no sentinels
       val srcDir = Files.createTempDirectory("graft-restart-src-").toFile
       val outDir = Files.createTempDirectory("graft-restart-out-").toFile.getAbsolutePath
-      val ckpt = Files.createTempDirectory("graft-restart-ckpt-").toFile.getAbsolutePath
       val parts = Option(new File(rep.srcDir).listFiles())
         .getOrElse(Array.empty[File])
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -1171,7 +1189,7 @@ object StreamOps {
         Files.copy(f.toPath, dst.toPath, StandardCopyOption.REPLACE_EXISTING)
         dst.setLastModified(f.lastModified)
       }
-      def runOnce(): Unit =
+      def runOnce(ckpt: String): Unit =
         s.readStream.schema(rep.schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(srcDir.getAbsolutePath)
@@ -1186,8 +1204,10 @@ object StreamOps {
           .trigger(Trigger.AvailableNow())
           .start().awaitTermination()
       val (firstHalf, rest) = parts.splitAt(parts.length / 2)
-      arrive(firstHalf); runOnce()
-      arrive(rest); runOnce()
+      withCheckpoint("graft-restart-ckpt-") { ckpt =>
+        arrive(firstHalf); runOnce(ckpt)
+        arrive(rest); runOnce(ckpt)
+      }
       s.read.parquet(outDir) // reads through the sink's commit log
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -1225,30 +1245,31 @@ object StreamOps {
           st.close()
         } finally conn.close()
       }
-      val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-      runReplay(s, rep, 1) { src =>
-        // the sink's (window_start, event_type) PRIMARY KEY cannot hold
-        // NULL — a null key canonicalizes to '' at the sink boundary (the
-        // src_text_roundtrip convention); the oracle groups the same
-        // coalesce, so NULL and '' merge identically on both engines
-        // BEFORE the aggregation, not after: post-agg coalescing would
-        // leave a NULL group and a genuine '' group as two rows sharing
-        // one PRIMARY KEY on a corpus carrying both — merging upstream
-        // is exactly the oracle's GROUP BY coalesce(event_type, '')
-        windowAgg(src.withColumn("event_type",
-            coalesce(col("event_type"), lit(""))))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           _: Long) =>
-            batch.coalesce(1).foreachPartition {
-              (rows: Iterator[org.apache.spark.sql.Row]) =>
-                upsertWindowRows(url, tbl, rows)
+      withCheckpoint() { ckpt =>
+        runReplay(s, rep, 1) { src =>
+          // the sink's (window_start, event_type) PRIMARY KEY cannot hold
+          // NULL — a null key canonicalizes to '' at the sink boundary (the
+          // src_text_roundtrip convention); the oracle groups the same
+          // coalesce, so NULL and '' merge identically on both engines
+          // BEFORE the aggregation, not after: post-agg coalescing would
+          // leave a NULL group and a genuine '' group as two rows sharing
+          // one PRIMARY KEY on a corpus carrying both — merging upstream
+          // is exactly the oracle's GROUP BY coalesce(event_type, '')
+          windowAgg(src.withColumn("event_type",
+              coalesce(col("event_type"), lit(""))))
+            .writeStream
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                             _: Long) =>
+              batch.coalesce(1).foreachPartition {
+                (rows: Iterator[org.apache.spark.sql.Row]) =>
+                  upsertWindowRows(url, tbl, rows)
+              }
             }
-          }
-          .start()
+            .start()
+        }
       }
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
@@ -1311,19 +1332,20 @@ object StreamOps {
     "stream_bus_source" -> ((s, d) => {
       val topic = busTopic(s, d)
       val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-      val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-      s.readStream.format("graft-bus")
-        .option("topic", topic)
-        .option("batchesPerTrigger", 1)
-        .load()
-        .filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "value")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      withCheckpoint() { ckpt =>
+        s.readStream.format("graft-bus")
+          .option("topic", topic)
+          .option("batchesPerTrigger", 1)
+          .load()
+          .filter(col("event_type") === "purchase")
+          .select("event_id", "user_id", "value")
+          .writeStream.format("memory").queryName(name)
+          .outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
       s.table(name).orderBy("event_id")
     }),
 
@@ -1337,19 +1359,20 @@ object StreamOps {
     "stream_bus_partitioned" -> ((s, d) => {
       val topic = busTopicPartitioned(s, d)
       val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-      val ckpt = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-      s.readStream.format("graft-bus")
-        .option("topic", topic)
-        .option("batchesPerTrigger", 1)
-        .load()
-        .filter(col("event_type") === "click")
-        .select("event_id", "user_id", "value")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      withCheckpoint() { ckpt =>
+        s.readStream.format("graft-bus")
+          .option("topic", topic)
+          .option("batchesPerTrigger", 1)
+          .load()
+          .filter(col("event_type") === "click")
+          .select("event_id", "user_id", "value")
+          .writeStream.format("memory").queryName(name)
+          .outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
       s.table(name).orderBy("event_id")
     }),
 
@@ -1362,22 +1385,24 @@ object StreamOps {
       val topic = busTopic(s, d)
       val nc = nameCounter.incrementAndGet()
       val out = s"bus_sink_$nc"
-      val ckptW = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-      s.readStream.format("graft-bus")
-        .option("topic", topic).option("batchesPerTrigger", 2).load()
-        .filter(col("event_type") === "signup")
-        .select("event_id", "user_id", "value")
-        .writeStream.format("graft-bus").option("topic", out)
-        .option("checkpointLocation", ckptW).outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+      withCheckpoint() { ckpt =>
+        s.readStream.format("graft-bus")
+          .option("topic", topic).option("batchesPerTrigger", 2).load()
+          .filter(col("event_type") === "signup")
+          .select("event_id", "user_id", "value")
+          .writeStream.format("graft-bus").option("topic", out)
+          .option("checkpointLocation", ckpt).outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start().awaitTermination()
+      }
       val name = s"graft_stream_$nc"
-      val ckptR = Files.createTempDirectory("graft-ckpt-").toFile.getAbsolutePath
-      s.readStream.format("graft-bus").option("topic", out).load()
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckptR).outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+      withCheckpoint() { ckpt =>
+        s.readStream.format("graft-bus").option("topic", out).load()
+          .writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ckpt).outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start().awaitTermination()
+      }
       // the memory-sink table now holds the result; drop the per-invocation
       // sink topic so repeated invocations don't accrete driver-held rows
       graft.sources.BusRegistry.remove(out)

@@ -1,7 +1,12 @@
 package graft
 
+import graft.api.Graft
 import graft.plans.{AsOfJoinExec, AsOfJoinStrategy}
+import graft.streaming.LocalCheckpointFileManager
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The imperative registration path: on a session built WITHOUT
@@ -58,6 +63,30 @@ class ImperativeRegistrationSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
     assert(sim.nonEmpty && sim.forall(_.getLong(2) <= 4))
     Seq("graft_minhash", "graft_simhash").foreach(f =>
       assert(spark.catalog.functionExists(f), f))
+  }
+
+  test("Graft.register sets the checkpoint file manager unless the user chose one") {
+    val key = LocalCheckpointFileManager.ConfKey
+    // create() builds the manager only; nothing is written under root
+    val root = new Path("file:/graft-cfm-reg/ckpt")
+    def managerOf(s: SparkSession) = CheckpointFileManager.create(root, s.sessionState.newHadoopConf())
+    // a new session starts from the SparkConf, which this one never set
+    val plain = spark.newSession()
+    assert(!managerOf(plain).isInstanceOf[LocalCheckpointFileManager])
+    Graft.register(plain)
+    assert(managerOf(plain).isInstanceOf[LocalCheckpointFileManager])
+    val chosen = spark.newSession()
+    chosen.conf.set(key, classOf[FileSystemBasedCheckpointFileManager].getName)
+    Graft.register(chosen)
+    assert(managerOf(chosen).isInstanceOf[FileSystemBasedCheckpointFileManager])
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set(key, classOf[FileSystemBasedCheckpointFileManager].getName)
+    try {
+      val viaHadoop = spark.newSession()
+      Graft.register(viaHadoop)
+      assert(viaHadoop.conf.getOption(key).isEmpty)
+      assert(managerOf(viaHadoop).isInstanceOf[FileSystemBasedCheckpointFileManager])
+    } finally hadoopConf.unset(key)
   }
 
   test("repeated dispatch registers each rule and strategy exactly once") {

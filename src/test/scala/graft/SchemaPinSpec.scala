@@ -120,6 +120,17 @@ class SchemaPinSpec extends AnyFunSuite {
     }
   }
 
+  test("a SQL key registers only the views its text names") {
+    def viewsOf(key: String): Set[String] = {
+      val s = spark.newSession() // temp views are per session
+      SparkEntry.queries(key)(s, d)
+      s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    }
+    assert(viewsOf("sql_q6_forecast_revenue") === Set("lineitem_m"))
+    assert(viewsOf("sql_q3_shipping") === Set("customer_m", "orders_m", "lineitem_m"))
+    assert(viewsOf("sql_recursive_cte") === Set("walk_edges_m"))
+  }
+
   test("fixture row counts at sf0.001") {
     assert(Tables.region(spark, d).count() === 5)
     assert(Tables.nation(spark, d).count() === 25)

@@ -2,7 +2,9 @@ package graft
 
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Millis, Seconds, Span}
 
 /** Streaming batch-equivalence suite (SURVEY §5): each §2-I query replayed
   * through the chunked file stream must equal the same computation done in
@@ -330,6 +332,22 @@ class StreamingSpec extends AnyFunSuite {
       val row = StreamOps.queries("stream_late_data")(spark, sf).collect()(0)
       assert(row.getAs[Long]("n_late_injected") > 0, s"$sf: no late rows injected")
       assert(row.getAs[Boolean]("all_late_dropped"), s"$sf: late rows leaked: $row")
+    }
+  }
+
+  test("stream keys delete their checkpoint dirs") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts(): Set[String] = tmp.list().toSet.filter(n =>
+      Seq("graft-ckpt-", "graft-restart-ckpt-", "graft-warm-ckpt-").exists(n.startsWith))
+    Seq("stream_bus_sink", "stream_tumbling", "stream_checkpoint_restart").foreach { k =>
+      val before = ckpts()
+      assert(StreamOps.queries(k)(spark, d).collect().nonEmpty, k)
+      // test JVMs share the temp dir: a dir another one's query holds
+      // goes when that query ends, one this key leaked stays
+      val fresh = ckpts() -- before
+      eventually(timeout(Span(120, Seconds)), interval(Span(500, Millis))) {
+        assert(fresh.filter(n => new java.io.File(tmp, n).exists).isEmpty, k)
+      }
     }
   }
 
